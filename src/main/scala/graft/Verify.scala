@@ -39,15 +39,17 @@ object Verify {
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
       .map { case (name, fn) =>
       scala.concurrent.Future {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        try { fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"); None }
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
         }
       }
     }
-    scala.concurrent.Await.result(
+    val failed = scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(runs), scala.concurrent.duration.Duration.Inf)
+      .flatten.sorted
     pool.shutdown()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -65,5 +67,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // every output and oracle_sql.json are written first; then fail loudly
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(" ")}")
+      sys.exit(1)
+    }
   }
 }

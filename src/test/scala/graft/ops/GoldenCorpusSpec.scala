@@ -17,6 +17,12 @@ class GoldenCorpusSpec extends SparkSpec {
 
   private val corpusDir = new File("/root/reference/cypher/co7_relationship_scripts")
 
+  /** The corpus's .cypher files; empty (not an NPE) when it is not mounted,
+    * so each test fails on its own "reference corpus missing" assertion. */
+  private def corpusFiles: Array[File] =
+    Option(corpusDir.listFiles()).getOrElse(Array.empty[File])
+      .filter(_.getName.endsWith(".cypher"))
+
   // MERGE (V1:L1 {id: 'I1'}) ON CREATE SET V1.name = 'N1', V1.type = 'L1'  MERGE (V2:L2 {id: 'I2'}) ...
   // Var names are random uppercase — 16 chars in the active config era,
   // 5 chars in the legacy era (sheet1-3).
@@ -35,7 +41,7 @@ class GoldenCorpusSpec extends SparkSpec {
       s"MERGE (a)-[:${m.group("rel")}]->(b)"
 
   test("sheet compiler reproduces every reference statement byte-for-byte (modulo var names)") {
-    val files = corpusDir.listFiles().filter(_.getName.endsWith(".cypher")).sortBy(_.getName)
+    val files = corpusFiles.sortBy(_.getName)
     assert(files.nonEmpty, "reference corpus missing")
     var total = 0
     files.foreach { f =>
@@ -66,7 +72,8 @@ class GoldenCorpusSpec extends SparkSpec {
   }
 
   test("label/type fidelity incl. trailing-space labels observed in the corpus") {
-    val files = corpusDir.listFiles().filter(_.getName.endsWith(".cypher"))
+    val files = corpusFiles
+    assert(files.nonEmpty, "reference corpus missing")
     val labels = files.flatMap { f =>
       Files.readAllLines(f.toPath).asScala.filter(_.nonEmpty).flatMap { l =>
         stmt.findFirstMatchIn(l).map(m => Seq(m.group("l1"), m.group("l2"))).getOrElse(Seq.empty)

@@ -72,4 +72,63 @@ class StreamGateSpec extends SparkSpec {
     assert(out.count() == 80)
     assert(out.select("id").as[Long].collect().sorted.toSeq == (1L to 80L))
   }
+
+  test("replay restores the session's shuffle width and checkpoint manager; unset stays unset") {
+    val widthKey = "spark.sql.shuffle.partitions"
+    val fmKey = "spark.sql.streaming.checkpointFileManagerClass"
+    val pkg = "org.apache.spark.sql.execution.streaming.checkpointing."
+    val width = spark.conf.get(widthKey)
+    assert(!spark.conf.getAll.contains(fmKey))
+    var inside: (String, Option[String]) = null
+    def replayOnce(): Unit =
+      StreamGate.replay(spark, Seq(1L, 2L).toDF("id"), "sgspec_conf", files = 2, mode = "append") {
+        df => inside = (spark.conf.get(widthKey), spark.conf.getOption(fmKey)); df
+      }.collect()
+    spark.conf.set(widthKey, "3")
+    try {
+      replayOnce()
+      assert(inside == ((StreamGate.gatePartitions, Some(pkg + "FileSystemBasedCheckpointFileManager"))))
+      assert(spark.conf.get(widthKey) == "3")
+      assert(!spark.conf.getAll.contains(fmKey))
+      // an explicitly set manager comes back as it was, too
+      spark.conf.set(fmKey, pkg + "FileContextBasedCheckpointFileManager")
+      replayOnce()
+      assert(spark.conf.get(fmKey) == pkg + "FileContextBasedCheckpointFileManager")
+      assert(spark.conf.get(widthKey) == "3")
+    } finally {
+      spark.conf.set(widthKey, width)
+      spark.conf.unset(fmKey)
+    }
+  }
+
+  test("checkpoint files keep their .crc sidecars: offsets, commits and state deltas") {
+    // transform runs again before run 2 starts, so its second call sees
+    // run 1's finished checkpoint under the per-run root
+    val prefix = s"graft_stream_sgspec_crc_${ProcessHandle.current().pid()}_"
+    var calls = 0
+    var checked = Seq.empty[String]
+    val in = (1L to 40L).map(i => (i % 10, (i % 4).toInt)).toDF("id", "stage_b")
+    val out = StreamGate.replayStagedRestart(spark, in, "sgspec_crc", "stage_b", 4, 2) { df =>
+      calls += 1
+      if (calls == 2) {
+        val roots = new java.io.File(System.getProperty("java.io.tmpdir")).listFiles()
+          .filter(_.getName.startsWith(prefix))
+        assert(roots.length == 1, roots.map(_.getName).mkString(", "))
+        val ckpt = new java.io.File(roots.head, "ckpt")
+        def files(d: java.io.File): Seq[java.io.File] =
+          Option(d.listFiles()).toSeq.flatten.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+        val deltas = files(new java.io.File(ckpt, "state")).filter(_.getName.endsWith(".delta"))
+        assert(deltas.nonEmpty, "no state delta files after run 1")
+        checked = (Seq(new java.io.File(ckpt, "offsets/0"), new java.io.File(ckpt, "commits/0")) ++
+          deltas).map { f =>
+          assert(f.isFile, s"missing checkpoint file $f")
+          assert(new java.io.File(f.getParentFile, s".${f.getName}.crc").isFile, s"no .crc for $f")
+          f.getName
+        }
+      }
+      df.dropDuplicates("id")
+    }
+    assert(calls == 2 && checked.size >= 3)
+    assert(out.count() == 10)
+  }
 }
