@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode}
+import com.fasterxml.jackson.databind.cfg.JsonNodeFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+import java.lang.management.ManagementFactory
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR and prints
   * one JSON line. Queries are forced through the noop sink (full
@@ -64,52 +69,14 @@ object Bench {
     * headline `value` is the sum of child totals (each child excludes its
     * own warmup/startup from timed regions, as always). */
   private def forkedMain(chunkSize: Int): Unit = {
-    val names = SparkEntry.catalog.map(_.name)
-    val chunks = names.grouped(chunkSize).toSeq
+    val chunks = SparkEntry.catalog.map(_.name).grouped(chunkSize).toSeq
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val cp = System.getProperty("java.class.path")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val xmx = s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}"
+    val jvmFlags = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
     val tmp = java.nio.file.Files.createTempDirectory("graft_bench_fork")
-    // brace-matched top-level object extraction: child output is
-    // code-controlled (query names + numbers; no braces inside strings)
-    def extractObj(line: String, key: String): Option[String] = {
-      val at = line.indexOf("\"" + key + "\":{")
-      if (at < 0) None
-      else {
-        val start = line.indexOf('{', at)
-        var depth = 0
-        var i = start
-        while (i < line.length) {
-          if (line(i) == '{') depth += 1
-          else if (line(i) == '}') { depth -= 1; if (depth == 0) return Some(line.substring(start + 1, i)) }
-          i += 1
-        }
-        None
-      }
-    }
-    def extractNum(line: String, key: String): Double =
-      ("\"" + key + "\":([-0-9.eE+]+)").r.findFirstMatchIn(line)
-        .map(_.group(1).toDouble).getOrElse(0.0)
-    var bodies = Map("runs" -> Vector.empty[String], "cold_runs" -> Vector.empty[String],
-      "queries" -> Vector.empty[String], "cold_rerun" -> Vector.empty[String],
-      "store_build" -> Vector.empty[String])
-    var total = 0.0
-    var failed = 0
-    var leaked = 0
-    chunks.zipWithIndex.foreach { case (chunk, i) =>
+    val lines = chunks.zipWithIndex.map { case (chunk, i) =>
       val childJson = s"$tmp/chunk_$i.json"
-      val cmd = (Seq(javaBin) ++ addOpens ++ Seq(xmx,
-        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-        "-cp", cp, "graft.Bench") ++ chunk)
+      val cmd = Seq(javaBin) ++ jvmFlags ++
+        Seq("-cp", System.getProperty("java.class.path"), "graft.Bench") ++ chunk
       val pb = new ProcessBuilder(cmd: _*)
       pb.environment().remove("SPARK_GRAFT_FORK") // child runs inline mode
       // children are restricted runs (args = their chunk), which skip the
@@ -117,41 +84,74 @@ object Bench {
       pb.environment().put("SPARK_GRAFT_ENGINE_WARMUP", "1")
       pb.environment().put("SPARK_GRAFT_BENCH_JSON", childJson)
       pb.environment().put("SPARK_GRAFT_BENCH_LOG", s"$tmp/chunk_$i.log")
-      pb.redirectErrorStream(false)
       pb.inheritIO()
       val exit = pb.start().waitFor()
       val line =
         try new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(childJson)), "UTF-8").trim
         catch { case _: Exception => "" }
-      if (line.isEmpty) {
+      if (line.isEmpty)
         System.err.println(s"[bench] fork chunk $i (exit $exit): no JSON; " +
           s"queries ${chunk.mkString(",")} recorded as failed")
-        failed += chunk.size
-      } else {
-        bodies = bodies.map { case (k, acc) =>
-          k -> (acc ++ extractObj(line, k).filter(_.nonEmpty))
-        }
-        total += extractNum(line, "value")
-        failed += extractNum(line, "failed").toInt
-        leaked += extractNum(line, "leaked_rdds").toInt
-      }
+      chunk -> Option(line).filter(_.nonEmpty)
     }
-    def join(k: String): String = bodies(k).mkString("{", ",", "}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val jsonPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON", "/tmp/graft_bench.json")
-    val line = s"""{"runs":${join("runs")},"cold_runs":${join("cold_runs")},""" +
-      s""""queries":${join("queries")},"cold_rerun":${join("cold_rerun")},""" +
-      s""""store_build":${join("store_build")},"metric":"total",""" +
-      f""""value":$total%.2f,"unit":"sec","failed":$failed,"leaked_rdds":$leaked,""" +
-      s""""mode":"forked","chunks":${chunks.size},"chunk_size":$chunkSize,""" +
-      s""""json":"$jsonPath","sf":"$sfDir"}"""
-    try {
-      val w = new java.io.PrintStream(new java.io.FileOutputStream(jsonPath), false, "UTF-8")
-      try w.println(line) finally w.close()
-    } catch { case e: Throwable => System.err.println(s"[bench] json write: ${e.getMessage}") }
-    println(line)
-    if (failed > 0) sys.exit(1)
+    val out = mergeChunks(lines)
+      .put("mode", "forked").put("chunks", chunks.size).put("chunk_size", chunkSize)
+      .put("json", jsonPath).put("sf", sfDir)
+    emit(out, jsonPath)
+    if (out.get("failed").asInt > 0) sys.exit(1)
+  }
+
+  // timings stay exact decimals, so a child's "0.40" merges back as "0.40"
+  private val mapper = JsonMapper.builder()
+    .enable(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
+    .disable(JsonNodeFeature.STRIP_TRAILING_BIGDECIMAL_ZEROES)
+    .build()
+
+  private val perQueryKeys = Seq("runs", "cold_runs", "queries", "cold_rerun", "store_build")
+
+  /** Merges the forked children's JSON lines into the one bench line: the
+    * per-query objects are unioned in chunk order, and `value`, `failed` and
+    * `leaked_rdds` are summed. A chunk whose child left no JSON (`None`, or
+    * a line that does not parse) counts all of its queries as failed. */
+  private[graft] def mergeChunks(chunks: Seq[(Seq[String], Option[String])]): ObjectNode = {
+    val out = mapper.createObjectNode()
+    val bodies = perQueryKeys.map(k => k -> out.putObject(k)).toMap
+    var total = 0.0
+    var failed = 0
+    var leaked = 0
+    chunks.foreach { case (names, line) =>
+      line.flatMap(l => scala.util.Try(mapper.readTree(l)).toOption).filter(_.isObject) match {
+        case None => failed += names.size
+        case Some(j) =>
+          perQueryKeys.foreach { k =>
+            j.path(k) match {
+              case o: ObjectNode => bodies(k).setAll[JsonNode](o)
+              case _ =>
+            }
+          }
+          total += j.path("value").asDouble
+          failed += j.path("failed").asInt
+          leaked += j.path("leaked_rdds").asInt
+      }
+    }
+    out.put("metric", "total").put("value", secs(total)).put("unit", "sec")
+      .put("failed", failed).put("leaked_rdds", leaked)
+  }
+
+  // 2 decimals: per-query noise is ±0.1 s anyway, and the one JSON line
+  // must fit a bounded harness tail even as the catalog grows
+  private def secs(t: Double): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(t).setScale(2, java.math.RoundingMode.HALF_UP)
+
+  /** Writes the line to `jsonPath` and prints it. */
+  private def emit(line: ObjectNode, jsonPath: String): Unit = {
+    val text = mapper.writeValueAsString(line)
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(jsonPath), text + "\n")
+    catch { case e: Throwable => System.err.println(s"[bench] json write: ${e.getMessage}") }
+    println(text)
   }
 
   def main(args: Array[String]): Unit = {
@@ -200,29 +200,7 @@ object Bench {
     // normal-path flush
     sys.addShutdownHook { try logStream.flush() catch { case _: Throwable => } }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local mode: every task is process-local; never wait for locality
-      .config("spark.locality.wait", "0ms")
-      // typed-Aggregator paths (x11/x13) run through ObjectHashAggregate,
-      // which silently falls back to SORT-based aggregation after this many
-      // distinct keys per partition (default 128) — exactly the per-group
-      // sort the bounded-buffer aggregators exist to avoid; bounded ≤k-row
-      // buffers make a large in-memory hash map safe
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      // let the planner pick shuffled-hash over sort-merge when its size
-      // conditions hold (guide §3.1/§9): the hash build skips both sides'
-      // sorts; Spark still only chooses SHJ when a build-side partition is
-      // estimated to fit, so the spill posture at scale is unchanged.
-      // Measured −8.5% across the join-heavy catalog rows (46.5 → 42.5 s
-      // on the 15 heaviest batch queries) with identical results.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     // ERROR, not WARN: the per-query block sweep legitimately unpersists
     // localCheckpoint'd RDDs and Spark WARNs about the truncated lineage on
     // every one — dozens of noise lines that crowd real failures (and the
@@ -373,19 +351,6 @@ object Bench {
     graft.queries.SharedCache.clear()
     graft.ops.CheckpointBlocks.sweep(spark)
     val leaked = spark.sparkContext.getPersistentRDDs.size
-    // 2 decimals: per-query noise is ±0.1 s anyway, and the one JSON line
-    // must fit a bounded harness tail even as the catalog grows
-    def fmt(v: Option[Double]): String = v.map(t => f"$t%.2f").getOrElse("-1")
-    def fmtMins(rs: Seq[(String, Seq[Double])]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + fmt(v.minOption) }.mkString("{", ",", "}")
-    // raw per-run times (order preserved): lets a reader separate a genuine
-    // regression (both runs slow) from a container spike (one-sided outlier)
-    // without a re-run; a failed run is simply absent from its array
-    def fmtRuns(rs: Seq[(String, Seq[Double])]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + v.map(t => f"$t%.2f").mkString("[", ",", "]") }
-        .mkString("{", ",", "}")
-    val qs = fmtMins(results)
-    val colds = fmtMins(cold)
     // a broken cold path must fail the run like any other broken query:
     // SCALE.md tells cross-engine readers to use cold_rerun, so a silent -1
     // there would hide exactly the number the comparison depends on. failed
@@ -394,31 +359,33 @@ object Bench {
     val failed = (results.filter(_._2.isEmpty).map(_._1) ++
       cold.filter(_._2.isEmpty).map(_._1)).distinct.size
     val total = results.map(_._2).flatMap(_.minOption).sum
-    // env-supplied paths go through a real JSON string escape: a quote or
-    // backslash in SPARK_GRAFT_BENCH_LOG/SF_DIR must not break the one
-    // line the harness json-parses (query names are code-controlled)
-    def js(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // raw per-run times (order preserved): lets a reader separate a genuine
+    // regression (both runs slow) from a container spike (one-sided outlier)
+    // without a re-run; a failed run is simply absent from its array
+    def putRuns(o: ObjectNode, rs: Seq[(String, Seq[Double])]): Unit =
+      rs.foreach { case (k, v) => val a = o.putArray(k); v.foreach(t => a.add(secs(t))) }
+    def putMins(o: ObjectNode, rs: Seq[(String, Seq[Double])]): Unit =
+      rs.foreach { case (k, v) => v.minOption.fold(o.put(k, -1))(t => o.put(k, secs(t))) }
+    // per-query detail first (raw runs, then mins), summary last: a
+    // tail-truncated capture keeps the END of the line, so
+    // totals/annotations must sit there
+    val out = mapper.createObjectNode()
+    putRuns(out.putObject("runs"), results)
+    putRuns(out.putObject("cold_runs"), cold)
+    putMins(out.putObject("queries"), results)
+    putMins(out.putObject("cold_rerun"), cold)
     // store-build attribution: wall seconds each DerivedStore spent
     // BUILDING this JVM (absent = served from disk). A first-build is a
     // once-per-fixture cost that lands inside whichever query touched the
     // store first — readers comparing per-query ratios cross-engine
     // subtract it (or read the min-of-2, whose second run reads the store).
-    val stores = graft.ops.DerivedStore.buildSeconds.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }.mkString("{", ",", "}")
-    // per-query detail first (raw runs, then mins), summary last: a
-    // tail-truncated capture keeps the END of the line, so
-    // totals/annotations must sit there
-    val line = s"""{"runs":${fmtRuns(results)},"cold_runs":${fmtRuns(cold)},"queries":$qs,"cold_rerun":$colds,"store_build":$stores,"metric":"total","value":$total,"unit":"sec","failed":$failed,"leaked_rdds":$leaked,"log":${js(logPath)},"json":${js(jsonPath)},"sf":${js(sfDir)}}"""
-    try {
-      val w = new java.io.PrintStream(new java.io.FileOutputStream(jsonPath), false, "UTF-8")
-      try w.println(line) finally w.close()
-    } catch { case e: Throwable => System.err.println(s"[bench] json write: ${e.getMessage}") }
-    println(line)
+    val stores = out.putObject("store_build")
+    graft.ops.DerivedStore.buildSeconds.toSeq.sortBy(_._1)
+      .foreach { case (k, v) => stores.put(k, secs(v)) }
+    out.put("metric", "total").put("value", secs(total)).put("unit", "sec")
+      .put("failed", failed).put("leaked_rdds", leaked)
+      .put("log", logPath).put("json", jsonPath).put("sf", sfDir)
+    emit(out, jsonPath)
     // spark.stop() can throw on a wedged executor pool; the tee must be
     // detached and its sink closed on that path too, or the closed-over
     // stream stays attached to System.err for the rest of the JVM

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Per-decade LSH pair-count instrument (SCALE.md's x18 watch item): runs
@@ -11,18 +10,12 @@ import org.apache.spark.sql.functions._
   * growth means the banding holds; superlinear joined_rows means bucket
   * saturation (the x06 failure mode) and the banding needs retuning.
   *
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.PairStats /root/testdata/sf0.1"
+  *   sbt "runMain graft.PairStats <fixture dir>"
   */
 object PairStats {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     val doc = Tables.documents(spark, dir)
     val corpus = doc.unionByName(doc.select(

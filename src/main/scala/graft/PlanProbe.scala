@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc plan dump for catalog queries (not a test; used during
   * development to audit physical plans before pinning them).
   *
@@ -9,21 +7,14 @@ import org.apache.spark.sql.SparkSession
   * physical plan; with SPARK_GRAFT_PLAN_DIR set, each plan is ALSO written
   * to `$SPARK_GRAFT_PLAN_DIR/<name>_$SPARK_GRAFT_PLAN_SUFFIX.txt` (suffix
   * default "before") — the round-12 optimization evidence files under
-  * plans/r12/. Data dir comes from SPARK_GRAFT_SF_DIR (default sf0.1) and
-  * core count from SPARK_GRAFT_CPUS so plans are captured at the same scale
-  * and width the bench runs.
+  * plans/r12/. Data dir comes from SPARK_GRAFT_SF_DIR (default sf0.1); the
+  * session is [[GraftSession]]'s, so plans are captured at the same width
+  * and config the bench runs.
   */
 object PlanProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", false).getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     val outDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")

@@ -1,6 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,18 +8,7 @@ object Verify {
     // names. The driver always calls with exactly (sfDir, outDir).
     val Array(sfDir, outDir) = args.take(2)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench: keep typed-Aggregator paths in hash aggregation
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      // see Bench: prefer shuffled-hash join when the planner's size
-      // conditions hold — Verify must run the same plans the bench runs
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     // Footer-only schema audit BEFORE any query runs: a regenerated fixture
     // that breaks the FIXTURES.md contract surfaces as one line per
@@ -51,21 +39,8 @@ object Verify {
       scala.concurrent.Future.sequence(runs), scala.concurrent.duration.Duration.Inf)
       .flatten.sorted
     pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValue(new java.io.File(s"$outDir/oracle_sql.json"), SparkEntry.oracleSql.asJava)
     spark.stop()
     // every output and oracle_sql.json are written first; then fail loudly
     if (failed.nonEmpty) {

@@ -58,9 +58,15 @@ object ReferencePipeline {
           lit("PARENT_OF").as("rel"))
       }
       .addStage("sheet_nodes") { _ =>
-        in.sheets.map { case (idx, m) =>
+        // a node shared by several sheets appears once, with the props of
+        // the first sheet in workbook order: the reference runs the sheets'
+        // MERGE … ON CREATE SET scripts in order, so the first writer wins
+        val perSheet = in.sheets.toSeq.sortBy(_._1).map { case (idx, m) =>
           CypherCompiler.sheetGraph(XlsxSource.readSheet(spark, in.workbookPath, idx, maxCols), m)._1
-        }.reduce(_ unionByName _)
+            .withColumn("sheet_idx", lit(idx))
+        }
+        GraphTable.firstWriterWins(perSheet.reduce(_ unionByName _), Seq("label", "key"), "sheet_idx")
+          .drop("sheet_idx")
       }
       .addStage("sheet_edges") { _ =>
         in.sheets.map { case (idx, m) =>

@@ -65,7 +65,7 @@ object TextDedup {
   def lshCandidatePairs(docs: DataFrame, seeds: Int = 8, rowsPerBand: Int = 2): DataFrame = {
     // the band frame self-joins: without materialization the whole
     // tokenize→shingle→minhash chain runs once per join side (the
-    // multi-consumer trap, ScanAudit). |docs|×nBands rows — checkpoint.
+    // multi-consumer trap). |docs|×nBands rows — checkpoint.
     val bands = bandFrame(docs, seeds, rowsPerBand).localCheckpoint(true)
     bands.as("a")
       .join(bands.as("b"),

@@ -225,8 +225,7 @@ object AsOfJoinExec {
   * "ts" -> "o_orderdate", tieBreak = Some("o_orderkey"))`. Columns are
   * named (resolved against each side's analyzed plan), sidestepping any
   * ambiguity between the two inputs. Registers [[AsOfJoinStrategy]] on the
-  * session idempotently; production sessions can instead opt in globally
-  * via spark.sql.extensions=graft.plans.GraftExtensions.
+  * session idempotently, so no session needs to install it up front.
   */
 object AsOf {
 

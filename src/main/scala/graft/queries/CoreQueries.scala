@@ -64,7 +64,7 @@ object CoreQueries {
     // (b) the iterative consumers (q48's three self-join arms, q49's LPA
     // rounds, q55's peeling rounds) never re-derive the lineitem⋈orders
     // join. The un-cached shape put 16–18 parquet scans in q48/q49's
-    // executed plans (ScanAudit).
+    // executed plans.
     val edges = pairs.localCheckpoint(true)
     edges
       .crossJoin(broadcast(edges.agg(avg(col("w")).as("avg_w"))))
@@ -1070,8 +1070,8 @@ object CoreQueries {
     // aggregates, each conditioning on the previous window's result
     // (three Window operators over the same partitioning, zero extra
     // shuffles). The previous join-cascade formulation re-scanned the
-    // event table four times and re-aggregated per step (ScanAudit: 7
-    // parquet scans); at 100 TB those are four passes over the fact
+    // event table four times and re-aggregated per step (7 parquet
+    // scans); at 100 TB those are four passes over the fact
     // stream for what one pass computes. Per-user state is three longs,
     // never an event buffer.
     QueryDef(

@@ -2902,7 +2902,7 @@ object PipelineQueries {
       (s, d) => {
         // tokenize once: t has three consumers (query terms, doc lengths,
         // the tf explode) and tf two (df + scoring) — checkpoint both so
-        // the corpus is scanned and exploded a single time (ScanAudit)
+        // the corpus is scanned and exploded a single time
         val t = documents(s, d).select(col("doc_id"), tokens(col("text")).as("tk"))
           .localCheckpoint(true)
         val qt = t.filter(col("doc_id") === 0)
@@ -4062,7 +4062,7 @@ object PipelineQueries {
           .select(col("doc_id"), col("split"), col("h"),
             coalesce(col("canonical_id"), col("doc_id")).as("can"))
           // three consumers (both leak-stat tables + the probe) — one
-          // materialization of the pruned ids+digest frame (ScanAudit)
+          // materialization of the pruned ids+digest frame
           .localCheckpoint(true)
         val isTrain = when(col("split") === "train", 1L).otherwise(0L)
         val hstat = withCan.groupBy("h").agg(max(isTrain).as("h_has_train"))
@@ -4562,7 +4562,7 @@ object PipelineQueries {
             graft.ops.Sampling.splitColumn(col("can"), "gsplit", 0.8))
           // four consumers (both leak-stat tables, the probe, the split
           // counts) — checkpoint the pruned (ids+digest) frame so the
-          // corpus scan + full-text md5 runs once (ScanAudit: 8 scans)
+          // corpus scan + full-text md5 runs once (8 scans before)
           .localCheckpoint(true)
         val isTrain = when(col("split") === "train", 1L).otherwise(0L)
         val hstat = withCan.groupBy("h").agg(max(isTrain).as("h_has_train"))
@@ -13569,17 +13569,6 @@ object PipelineQueries {
     QueryDef(
       "x210_ivf_pq_trained",
       (s, d) => {
-        // Env-gated per-barrier timings (SPARK_GRAFT_X210_TIMINGS), kept as
-        // a permanent diagnostic: inert without the env var, and the
-        // round-12/13 barrier attributions in OPTIMIZATION_r1{2,3}.md came
-        // from it.
-        def tstage[T](label: String)(body: => T): T =
-          if (!sys.env.contains("SPARK_GRAFT_X210_TIMINGS")) body
-          else {
-            val t0 = System.nanoTime(); val r = body
-            System.err.println(f"[x210] $label " +
-              f"${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-          }
         def l2(a: String, b: String) =
           s"aggregate(zip_with($a, $b, (x, y) -> (x - y) * (x - y)), " +
             "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
@@ -13591,17 +13580,17 @@ object PipelineQueries {
             "CASE WHEN g = 0.0 THEN array_repeat(CAST(0 AS BIGINT), " +
               "size(embedding)) ELSE transform(embedding, x -> " +
               "CAST(round(CAST(x AS DOUBLE) * 127 / g) AS BIGINT)) END").as("qv"))
-          .transform(df => tstage("e")(df.localCheckpoint(true))) // training + encode + queries + exact side
+          .localCheckpoint(true) // training + encode + queries + exact side
         // —— coarse quantizer: x23's driver-held Lloyd, L2 metric ——
         val kIvf = 8
-        val r0 = tstage("r0")(e.agg(min(col("vec_id")), max(col("vec_id"))).head())
+        val r0 = e.agg(min(col("vec_id")), max(col("vec_id"))).head()
         val (mn, mx) = (r0.getLong(0), r0.getLong(1))
         val step = math.max(1L, (mx - mn + 1) / kIvf)
-        val c0 = tstage("c0")(e
+        val c0 = e
           .groupBy(least(floor((col("vec_id") - mn) / step), lit(kIvf - 1L))
             .cast("long").as("cid"))
           .agg(min_by(col("qv"), col("vec_id")).as("cv"))
-          .collect()).map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+          .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
           .sortBy(_._1)
         // argmin_c L2(v,c) = argmin_c (|c|² − 2·v·c): one narrow codegen
         // pass scoring all k centroids via the native IntDotProduct —
@@ -13628,8 +13617,8 @@ object PipelineQueries {
               (cid, rs.sortBy(_.getInt(1)).map(_.getLong(2)))
             }
             .sortBy(_._1)
-        val c1 = tstage("c1")(updateC(assignC(c0)))
-        val a2 = tstage("a2")(assignC(c1).localCheckpoint(true)) // vec_id, qv, cent_id
+        val c1 = updateC(assignC(c0))
+        val a2 = assignC(c1).localCheckpoint(true) // vec_id, qv, cent_id
         // —— residuals vs the trained coarse centroid ——
         import s.implicits._
         val centDf = c1.toSeq.map { case (cid, arr) => (cid, arr.toSeq) }
@@ -13637,12 +13626,12 @@ object PipelineQueries {
         val res = a2.join(broadcast(centDf), Seq("cent_id"))
           .select(col("vec_id"), col("cent_id"),
             expr("zip_with(qv, cv, (x, y) -> x - y)").as("rv"))
-          .transform(df => tstage("res")(df.localCheckpoint(true)))
+          .localCheckpoint(true)
         // —— referee input, pinned EARLY so the exact side can overlap the
         // PQ branch (guide §2.6): qfull needs only a2 ——
         val qfull = a2.filter(col("vec_id") % 53 === 7 && col("vec_id") < 20000)
           .select(col("vec_id").as("q_id"), col("qv").as("q_qv"))
-          .transform(df => tstage("qfull")(df.localCheckpoint(true)))
+          .localCheckpoint(true)
         // —— referee: exact integer-L2 top-10 over the FULL corpus ——
         // |q|²+|n|²−2q·n with the native dot (round 12): norms once per
         // side, the per-pair work is one codegen dot loop. Round 13: the
@@ -13665,7 +13654,7 @@ object PipelineQueries {
         // daemon EC: a failure on the main path must never leave a
         // non-daemon pool thread pinning the JVM
         val exactF = scala.concurrent.Future(
-          tstage("exact")(exactDf.localCheckpoint(true)))(
+          exactDf.localCheckpoint(true))(
           scala.concurrent.ExecutionContext.global)
         // —— PQ codebooks: x206's %31 sample SEEDS one Lloyd round ——
         // Round 13: the ≤128-row seed/trained books are COLLECTED once
@@ -13679,7 +13668,7 @@ object PipelineQueries {
             posexplode(expr(
               "transform(sequence(0, 7), t -> slice(rv, t * 8 + 1, 8))"))
               .as(Seq("sb", "cvec")))
-        val cb0Rows = tstage("cb0")(collectPqCb(cb0)) // ≤ m·kpq = 128 rows — bounded model state
+        val cb0Rows = collectPqCb(cb0) // ≤ m·kpq = 128 rows — bounded model state
         val sub = res.select(col("vec_id"), col("cent_id"),
             posexplode(expr(
               "transform(sequence(0, 7), t -> slice(rv, t * 8 + 1, 8))"))
@@ -13691,7 +13680,7 @@ object PipelineQueries {
           // dominant CPU of this gate). Integer identity: exact, same dv.
           .withColumn("sub2",
             graft.functions.IntDotProduct.intDot(col("sub"), col("sub")))
-          .transform(df => tstage("sub")(df.localCheckpoint(true))) // read by train-assign AND final encode
+          .localCheckpoint(true) // read by train-assign AND final encode
         // argmin codeword: the shared inline scorer (pqArgminCode) — the
         // codebook is collected (driver-held model state, the coarse
         // quantizer's own posture) and the packed dv·16+cw argmin unrolls
@@ -13706,7 +13695,7 @@ object PipelineQueries {
           .groupBy("sb", "cw")
           .agg(expr("transform(array_sort(collect_list(struct(p, cv))), x -> x.cv)")
             .as("cvec"))
-        val cb1Rows = tstage("cb1")(collectPqCb(cb1f)) // trained codebooks (empty codewords drop)
+        val cb1Rows = collectPqCb(cb1f) // trained codebooks (empty codewords drop)
         // the tiny trained book re-enters the plan as a LOCAL frame (no
         // recompute, no checkpoint) for the query-distance table below
         val cb1 = cb1Rows.toSeq.toDF("sb", "cw", "cvec")
@@ -13716,7 +13705,7 @@ object PipelineQueries {
         val q = res.filter(col("vec_id") % 53 === 7 && col("vec_id") < 20000)
           .select(col("vec_id").as("q_id"), col("cent_id").as("q_cent"),
             col("rv").as("q_rv"))
-          .transform(df => tstage("q")(df.localCheckpoint(true))) // bounded query sample (x69/x124 argument)
+          .localCheckpoint(true) // bounded query sample (x69/x124 argument)
         val qd = q.crossJoin(broadcast(cb1))
           .withColumn("qd", expr(l2("slice(q_rv, sb * 8 + 1, 8)", "cvec")))
           .select(col("q_id"), col("q_cent"), col("sb").as("qsb"),
@@ -13728,14 +13717,14 @@ object PipelineQueries {
           .filter(col("vec_id") =!= col("q_id"))
           .groupBy(col("q_id"), col("vec_id").as("n_id"))
           .agg(sum(col("qd")).as("adc"))
-          .transform(df => tstage("ap")(df.localCheckpoint(true))) // n_cands + top-k both read it
+          .localCheckpoint(true) // n_cands + top-k both read it
         val nCands = ap.groupBy("q_id").agg(count(lit(1)).as("n_cands"))
         val atop = ap
           .withColumn("rn", row_number().over(
             Window.partitionBy("q_id").orderBy(col("adc"), col("n_id"))))
           .filter(col("rn") <= 10)
           .select("q_id", "n_id", "adc")
-          .transform(df => tstage("atop")(df.localCheckpoint(true))) // overlap + adc_sum both read it
+          .localCheckpoint(true) // overlap + adc_sum both read it
         // join the concurrently-materialized exact referee (forked above,
         // right after its qfull/e inputs were pinned)
         val exact = scala.concurrent.Await.result(

@@ -3,15 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites (one JVM under Test/fork). */
+/** Shared session for all suites (one JVM under Test/fork): the production
+  * [[GraftSession]] at a fixed width of 4, so tests plan what Bench and
+  * Verify run. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession(cpus = 4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {
