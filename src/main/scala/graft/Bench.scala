@@ -84,7 +84,10 @@ object Bench {
       pb.environment().put("SPARK_GRAFT_ENGINE_WARMUP", "1")
       pb.environment().put("SPARK_GRAFT_BENCH_JSON", childJson)
       pb.environment().put("SPARK_GRAFT_BENCH_LOG", s"$tmp/chunk_$i.log")
-      pb.inheritIO()
+      // a child's stdout is only its JSON line, already in `childJson`:
+      // dropping it keeps this run's stdout to the one merged line
+      pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
+      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
       val exit = pb.start().waitFor()
       val line =
         try new String(java.nio.file.Files.readAllBytes(

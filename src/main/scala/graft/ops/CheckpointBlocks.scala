@@ -1,7 +1,9 @@
 package graft.ops
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** Storage hygiene for eagerly-checkpointed intermediates.
   *
@@ -18,9 +20,18 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object CheckpointBlocks {
 
-  /** Persisted RDD ids backing `df` (empty for non-checkpointed frames). */
-  def rddIds(df: DataFrame): Seq[Int] =
-    df.queryExecution.optimizedPlan.collect { case r: LogicalRDD => r.rdd.id }
+  /** Persisted RDD ids backing `df` (empty for non-checkpointed frames):
+    * each `LogicalRDD` leaf's RDD and the persisted RDDs in its lineage, so
+    * a leaf that unions checkpointed RDDs (a stream gate's result) names
+    * the blocks behind it. A checkpoint truncates lineage, so the walk
+    * stops there. */
+  def rddIds(df: DataFrame): Seq[Int] = {
+    def persisted(r: RDD[_]): Seq[Int] =
+      (if (r.getStorageLevel != StorageLevel.NONE) Seq(r.id) else Nil) ++
+        r.dependencies.flatMap(d => persisted(d.rdd))
+    df.queryExecution.optimizedPlan.collect { case r: LogicalRDD => persisted(r.rdd) }
+      .flatten.distinct
+  }
 
   /** Drop the storage blocks behind `df`. The frame is UNRECOMPUTABLE
     * afterwards (checkpoints have no lineage) — only call once every

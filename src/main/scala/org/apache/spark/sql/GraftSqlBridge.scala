@@ -1,6 +1,9 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.StructType
 
 /** Minimal `private[sql]` bridge for graft's custom plan nodes: the only
   * supported way to wrap a hand-built LogicalPlan into a DataFrame is
@@ -11,6 +14,13 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A frame over rows already in Catalyst's internal format (no
+    * conversion pass), with `schema` widened to nullable: the rows' own
+    * nullability is not checked, so the frame claims none it cannot prove.
+    * StreamGate wraps its pinned micro-batch emissions with it. */
+  def rowsToFrame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema.asNullable)
 
   /** An isolated copy of the session (shared context, independent runtime
     * conf — inherited, then divergeable): Spark 4 moved `cloneSession`

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class StreamGateSpec extends SparkSpec {
@@ -35,10 +36,44 @@ class StreamGateSpec extends SparkSpec {
     StreamGate.replay(spark, Seq(1L).toDF("id"), "sgspec_clean", files = 1, mode = "append")(identity)
     assert(spark.catalog.listTables().collect()
       .forall(t => !t.name.startsWith("graft_stream_sink_sgspec_clean")))
-    // the result was localCheckpointed, so the per-run staging root
-    // (input batches + parquet output) is gone
+    // the result lives in block-manager blocks, so the per-run staging
+    // root (input batches) is gone
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     assert(!tmp.listFiles().exists(_.getName.startsWith("graft_stream_sgspec_clean_")))
+  }
+
+  test("a replay whose every batch emits nothing is an empty frame with the plan's columns") {
+    val in = (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v")
+    val plans = Seq[(String, DataFrame => DataFrame)](
+      "append" -> (_.filter(lit(false)).select(col("id"), length(col("v")).as("n"))),
+      "complete" -> (_.filter(lit(false)).groupBy("id").agg(count(lit(1)).as("n"))))
+    for ((mode, plan) <- plans) {
+      val out = StreamGate.replay(spark, in, s"sgspec_empty_$mode", files = 3, mode = mode)(plan)
+      assert(out.columns.toSeq == Seq("id", "n"))
+      assert(out.count() == 0)
+    }
+  }
+
+  test("complete mode releases every superseded emission") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val in = (1L to 400L).map(i => (i % 5, i)).toDF("k", "x")
+    val out = StreamGate.replay(spark, in, "sgspec_release", files = 4) {
+      _.groupBy("k").agg(sum("x").as("s"))
+    }
+    val gained = spark.sparkContext.getPersistentRDDs.keySet -- before
+    // one pinned emission survives: the last, which backs the result
+    assert(gained.size == 1 && gained == graft.ops.CheckpointBlocks.rddIds(out).toSet)
+    assert(out.count() == 5)
+  }
+
+  test("a paced replay stops between triggers with every batch's emission") {
+    // availableNow = false runs the paced trigger that the gates with
+    // processing-time state use, stopped explicitly once every staged row
+    // was consumed
+    val in = (1L to 60L).map(i => (i % 25, (i % 3).toInt)).toDF("id", "stage_b")
+    val out = StreamGate.replayStaged(spark, in, "sgspec_paced", "stage_b", 3,
+      availableNow = false)(_.dropDuplicates("id"))
+    assert(out.select("id").as[Long].collect().sorted.toSeq == (0L until 25L))
   }
 
   test("unsafe names are rejected") {
@@ -73,23 +108,27 @@ class StreamGateSpec extends SparkSpec {
     assert(out.select("id").as[Long].collect().sorted.toSeq == (1L to 80L))
   }
 
+  // also covers the third gate conf, artifact isolation
   test("replay restores the session's shuffle width and checkpoint manager; unset stays unset") {
     val widthKey = "spark.sql.shuffle.partitions"
     val fmKey = "spark.sql.streaming.checkpointFileManagerClass"
+    val isoKey = "spark.sql.artifact.isolation.enabled"
     val pkg = "org.apache.spark.sql.execution.streaming.checkpointing."
     val width = spark.conf.get(widthKey)
     assert(!spark.conf.getAll.contains(fmKey))
-    var inside: (String, Option[String]) = null
+    assert(!spark.conf.getAll.contains(isoKey))
+    var inside: (String, Option[String], Option[String]) = null
     def replayOnce(): Unit =
       StreamGate.replay(spark, Seq(1L, 2L).toDF("id"), "sgspec_conf", files = 2, mode = "append") {
-        df => inside = (spark.conf.get(widthKey), spark.conf.getOption(fmKey)); df
+        df => inside = (spark.conf.get(widthKey), spark.conf.getOption(fmKey), spark.conf.getOption(isoKey)); df
       }.collect()
     spark.conf.set(widthKey, "3")
     try {
       replayOnce()
-      assert(inside == ((StreamGate.gatePartitions, Some(pkg + "FileSystemBasedCheckpointFileManager"))))
+      assert(inside == ((StreamGate.gatePartitions, Some(pkg + "FileSystemBasedCheckpointFileManager"), Some("false"))))
       assert(spark.conf.get(widthKey) == "3")
       assert(!spark.conf.getAll.contains(fmKey))
+      assert(!spark.conf.getAll.contains(isoKey))
       // an explicitly set manager comes back as it was, too
       spark.conf.set(fmKey, pkg + "FileContextBasedCheckpointFileManager")
       replayOnce()
