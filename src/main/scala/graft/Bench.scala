@@ -103,6 +103,9 @@ object Bench {
     val out = mergeChunks(lines)
       .put("mode", "forked").put("chunks", chunks.size).put("chunk_size", chunkSize)
       .put("json", jsonPath).put("sf", sfDir)
+    // the chunk files are read and merged; their logs duplicate the
+    // children's inherited stderr
+    org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
     emit(out, jsonPath)
     if (out.get("failed").asInt > 0) sys.exit(1)
   }
@@ -263,35 +266,17 @@ object Bench {
       // gate pays file-source, micro-batch planner, state-store, and
       // RocksDB native-library first-touch (~2-3 s, measured as the
       // forked-vs-inline residual on x205/x207 in SCALE.md round 12).
-      // One 2-batch file-stream aggregation on a RocksDB-provider CLONE
-      // loads all of it; the clone keeps the provider flip away from the
-      // catalog session, and nothing here touches a catalog query's plan
-      // or shared frames.
+      // One 2-batch aggregation replayed through the gates' own harness
+      // on RocksDB loads all of it (file source, pinning sink, checkpoint
+      // manager, state store) without touching a catalog query's plan or
+      // shared frames; the sweep below releases its pinned emission.
       try {
-        val wdir = java.nio.file.Files.createTempDirectory("graft_warm_stream")
         import org.apache.spark.sql.functions._
-        spark.range(0, 64).select(col("id"), (col("id") % 8).as("k"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$wdir/in")
-        val sc = org.apache.spark.sql.GraftSqlBridge.cloneSession(spark)
-        sc.conf.set("spark.sql.shuffle.partitions", "4")
-        sc.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")
-        val schema = sc.read.parquet(s"$wdir/in").schema
-        val q = sc.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$wdir/in")
-          .groupBy("k").count()
-          .writeStream
-          .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            df.write.format("noop").mode("overwrite").save()
-          }
-          .outputMode("complete")
-          .option("checkpointLocation", s"$wdir/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination(60000L)
-        if (q.isActive) q.stop()
-        org.apache.commons.io.FileUtils.deleteQuietly(wdir.toFile)
+        graft.streaming.StreamGate.replayStaged(spark,
+          spark.range(0, 64).select(col("id"), (col("id") % 8).as("k"),
+            (col("id") % 2).cast("int").as("b")),
+          "bench_warmup", "b", 2, "complete",
+          conf = Map(graft.streaming.StreamGate.RocksDb))(_.groupBy("k").count())
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] stream warmup: ${e.getMessage}")

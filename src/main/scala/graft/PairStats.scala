@@ -24,10 +24,12 @@ object PairStats {
     val t0 = System.nanoTime()
     val r = graft.ops.TextDedup.lshPairStats(corpus).head()
     val secs = (System.nanoTime() - t0) / 1e9
-    println(f"""{"sf_dir":"$dir","n_docs":${r.getLong(0)},""" +
-      f""""n_buckets":${r.getLong(1)},"max_bucket":${r.getLong(2)},""" +
-      f""""joined_rows":${r.getLong(3)},"n_candidates":${r.getLong(4)},""" +
-      f""""n_verified":${r.getLong(5)},"secs":$secs%.1f}""")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val line = mapper.createObjectNode().put("sf_dir", dir)
+    Seq("n_docs", "n_buckets", "max_bucket", "joined_rows", "n_candidates", "n_verified")
+      .zipWithIndex.foreach { case (k, i) => line.put(k, r.getLong(i)) }
+    line.put("secs", java.math.BigDecimal.valueOf(secs).setScale(1, java.math.RoundingMode.HALF_UP))
+    println(mapper.writeValueAsString(line))
     spark.stop()
   }
 }

@@ -9130,11 +9130,9 @@ object PipelineQueries {
     // running sums over the per-(user, batch) rollup. Integer cents make
     // within-batch order invisible (the processor folds rows in arrival
     // order — only exact addition keeps that deterministic). The
-    // RocksDB provider is set for the replay and restored after; running
-    // queries pin their provider at start, so the flip cannot affect a
-    // concurrently-replaying gate. Scale: one fixed-width state row per
-    // user, emission per active key per batch — the 100 TB running-
-    // profile shape.
+    // RocksDB provider is set on the replay's own session, so no other
+    // gate sees it. Scale: one fixed-width state row per user, emission
+    // per active key per batch — the 100 TB running-profile shape.
     QueryDef(
       "x154_stream_running_stats",
       (s, d) => {
@@ -9144,14 +9142,10 @@ object PipelineQueries {
             expr("""CAST(least(greatest(
                    |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
                    |  0), 3) AS INT)""".stripMargin).as("b"))
-        // cloned session (no restore needed): a session-global provider
-        // mutation would race the 4-in-flight catalog neighbors' streams
-        val sc = org.apache.spark.sql.GraftSqlBridge.cloneSession(s)
-        sc.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         val out =
           graft.streaming.StreamGate.replayStaged(
-            sc, staged, "x154_events", "b", 4, "append") { stream =>
+            s, staged, "x154_events", "b", 4, "append",
+            conf = Map(graft.streaming.StreamGate.RocksDb)) { stream =>
             graft.streaming.RunningUserStats.runningStats(
               stream.as[graft.streaming.RunningUserStats.EventIn](
                 org.apache.spark.sql.Encoders.product)).toDF()
@@ -9345,14 +9339,10 @@ object PipelineQueries {
             expr("""CAST(least(greatest(
                    |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
                    |  0), 3) AS INT)""".stripMargin).as("b"))
-        // cloned session (no restore needed): a session-global provider
-        // mutation would race the 4-in-flight catalog neighbors' streams
-        val sc = org.apache.spark.sql.GraftSqlBridge.cloneSession(s)
-        sc.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         val out =
           graft.streaming.StreamGate.replayStaged(
-            sc, staged, "x157_events", "b", 4, "append") { stream =>
+            s, staged, "x157_events", "b", 4, "append",
+            conf = Map(graft.streaming.StreamGate.RocksDb)) { stream =>
             graft.streaming.SessionTimers.sessions(
               stream.withWatermark("ts", "3 days")
                 .as[graft.streaming.SessionTimers.EventIn](
@@ -12119,28 +12109,21 @@ object PipelineQueries {
     // mode, exact integer cents. `rocksdb_used` is asserted from the
     // query's own state-operator custom metrics (a silent fallback to the
     // heap provider would flip the column and fail the hash), and the
-    // provider conf is set on a cloned session — no other gate sees it.
+    // provider conf is set on the replay's own session — no other gate
+    // sees it.
     QueryDef(
       "x195_stream_rocksdb_sliding",
       (s, d) => {
-        // cloned session (no restore needed): a session-global provider
-        // mutation would race the 4-in-flight catalog neighbors' streams
-        val sc = org.apache.spark.sql.GraftSqlBridge.cloneSession(s)
-        sc.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")
         val sawRocks = new java.util.concurrent.atomic.AtomicBoolean(false)
         val out = graft.streaming.StreamGate.replayStaged(
-          sc,
+          s,
           events(s, d).select(col("ts"), col("event_type"), col("value"),
             pmod(col("event_id"), lit(4)).cast("int").as("b")),
           name = "x195_events", batchCol = "b", nBatches = 4,
           mode = "complete",
-          progress = p => p.stateOperators.foreach { so =>
-            val it = so.customMetrics.keySet().iterator()
-            while (it.hasNext)
-              if (it.next().toLowerCase.contains("rocksdb")) sawRocks.set(true)
-          }) { stream =>
+          progress = p =>
+            if (graft.streaming.StreamGate.usesRocksDb(p)) sawRocks.set(true),
+          conf = Map(graft.streaming.StreamGate.RocksDb)) { stream =>
           stream
             .withColumn("cents", floor(col("value") * 100).cast(LongType))
             .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
@@ -12382,19 +12365,15 @@ object PipelineQueries {
             expr("""CAST(least(greatest(
                    |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
                    |  0), 3) AS INT)""".stripMargin).as("b"))
-        // cloned session (no restore needed): a session-global provider
-        // mutation would race the 4-in-flight catalog neighbors' streams
-        val sc = org.apache.spark.sql.GraftSqlBridge.cloneSession(s)
-        sc.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         // NOTE (round 12): changelog checkpointing measured SLOWER here —
         // this gate's TTL state is tiny, so snapshot upload is already
         // cheap and the changelog stream is pure added machinery (x213's
         // join state is where it wins). Left on the default.
         val out =
           graft.streaming.StreamGate.replayStaged(
-            sc, staged, "x199_events", "b", 4, "append",
-            availableNow = false) { stream =>
+            s, staged, "x199_events", "b", 4, "append",
+            availableNow = false,
+            conf = Map(graft.streaming.StreamGate.RocksDb)) { stream =>
             graft.streaming.TtlStates.ttlStats(
               stream.as[graft.streaming.TtlStates.EventIn](
                 org.apache.spark.sql.Encoders.product)).toDF()
@@ -12992,34 +12971,19 @@ object PipelineQueries {
             expr("""CAST(least(greatest(
                    |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
                    |  0), 3) AS INT)""".stripMargin).as("b"))
-        val provKey = "spark.sql.streaming.stateStore.providerClass"
-        val logKey = "spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled"
         def runOn(changelog: Boolean, label: String) = {
-          // cloned session: session-global provider/changelog mutations
-          // would race the 4-in-flight catalog neighbors' streams
-          val sc = org.apache.spark.sql.GraftSqlBridge.cloneSession(s)
-          sc.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-            "state.RocksDBStateStoreProvider")
-          sc.conf.set(logKey, changelog.toString)
-          // legs run concurrently: the harness's depth-guarded shuffle
-          // flip only sets the first entrant's session, so each clone
-          // pins the replay state width itself
-          sc.conf.set("spark.sql.shuffle.partitions",
-            graft.streaming.StreamGate.gatePartitions)
           val sawRocks = new java.util.concurrent.atomic.AtomicBoolean(false)
           val out = graft.streaming.StreamGate.replayStaged(
-            sc, staged, s"x205_events_$label", "b", 4, "append",
-            progress = p => p.stateOperators.foreach { so =>
-              val it = so.customMetrics.keySet().iterator()
-              while (it.hasNext)
-                if (it.next().toLowerCase.contains("rocksdb"))
-                  sawRocks.set(true)
-            },
+            s, staged, s"x205_events_$label", "b", 4, "append",
+            progress = p =>
+              if (graft.streaming.StreamGate.usesRocksDb(p)) sawRocks.set(true),
             // TimeMode.ProcessingTime never terminates under
             // AvailableNow; the paced trigger also guarantees the
             // trailing no-data batch that fires the final runs' timers
-            availableNow = false) { stream =>
+            availableNow = false,
+            conf = Map(graft.streaming.StreamGate.RocksDb,
+              "spark.sql.streaming.stateStore.rocksdb." +
+                "changelogCheckpointing.enabled" -> changelog.toString)) { stream =>
             graft.streaming.TtlTimerSessions.run(
               stream.as[graft.streaming.TtlTimerSessions.EventIn](
                 org.apache.spark.sql.Encoders.product)).toDF()
@@ -13029,7 +12993,7 @@ object PipelineQueries {
             lit(sawRocks.get()).as("rocks_metric"))
         }
         // The two persistence-mode legs are INDEPENDENT replays (own
-        // cloned session, own staging dir, own state stores): run them
+        // session, own staging dir, own state stores): run them
         // CONCURRENTLY (guide §2.6 — actions are only sequential because
         // driver code calls them sequentially). Each leg's emissions are
         // unchanged; the final full-tiebreak sort fixes the union order.
@@ -14019,25 +13983,16 @@ object PipelineQueries {
             expr("""CAST(least(greatest(
                    |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
                    |  0), 3) AS INT)""".stripMargin).as("b"))
-        val provKey = "spark.sql.streaming.stateStore.providerClass"
-        // cloned session: a session-global provider mutation would race
-        // the 4-in-flight catalog neighbors (x213's matrix in particular)
-        val sc = org.apache.spark.sql.GraftSqlBridge.cloneSession(s)
-        sc.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider")
         // changelog checkpointing left on the default here (round 12):
         // neutral for this gate's state size — see x199's note; x213 is
         // where the knob pays.
         val sawRocks = new java.util.concurrent.atomic.AtomicBoolean(false)
         val out = graft.streaming.StreamGate.replayStaged(
-          sc, staged, "x212_events", "b", 4, "append",
-          progress = p => p.stateOperators.foreach { so =>
-            val it = so.customMetrics.keySet().iterator()
-            while (it.hasNext)
-              if (it.next().toLowerCase.contains("rocksdb"))
-                sawRocks.set(true)
-          },
-          availableNow = false) { stream =>
+          s, staged, "x212_events", "b", 4, "append",
+          progress = p =>
+            if (graft.streaming.StreamGate.usesRocksDb(p)) sawRocks.set(true),
+          availableNow = false,
+          conf = Map(graft.streaming.StreamGate.RocksDb)) { stream =>
           graft.streaming.MapListStates.run(
             stream.as[graft.streaming.MapListStates.EventIn](
               org.apache.spark.sql.Encoders.product)).toDF()
@@ -14097,45 +14052,35 @@ object PipelineQueries {
                    |  0), 3) AS INT)""".stripMargin).as("b"))
         val provKey = "spark.sql.streaming.stateStore.providerClass"
         def runOn(rocks: Boolean, label: String) = {
-          // each leg runs on a CLONED session: Verify drives 4 catalog
-          // queries concurrently in one session, so a session-global
-          // provider mutation here would race the neighbors' streams
-          // (and theirs would race this leg — observed at sf0.1)
-          val sc = org.apache.spark.sql.GraftSqlBridge.cloneSession(s)
-          if (rocks) {
-            sc.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-              "state.RocksDBStateStoreProvider")
-            // changelog checkpointing: commits append a changelog instead
-            // of uploading full SST snapshots per batch per store (round
-            // 12, −1.5 s measured) — a pure persistence-cost knob; this
-            // gate's claim is PROVIDER-equality (the checkpoint-format
-            // matrix is x205's gate), and the emitted pairs are
-            // hash-identical either way
-            sc.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-              "changelogCheckpointing.enabled", "true")
-          } else
-            sc.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-              "state.HDFSBackedStateStoreProvider")
-          // legs run concurrently: the harness's depth-guarded shuffle
-          // flip only sets the first entrant's session, so each clone
-          // pins the replay state width itself
-          sc.conf.set("spark.sql.shuffle.partitions",
-            graft.streaming.StreamGate.gatePartitions)
+          // each leg's provider is set on its replay's own session: Verify
+          // drives 4 catalog queries concurrently in one session, so a
+          // session-global provider mutation here would race the
+          // neighbors' streams (and theirs would race this leg — observed
+          // at sf0.1).
+          // changelog checkpointing: commits append a changelog instead
+          // of uploading full SST snapshots per batch per store (round
+          // 12, −1.5 s measured) — a pure persistence-cost knob; this
+          // gate's claim is PROVIDER-equality (the checkpoint-format
+          // matrix is x205's gate), and the emitted pairs are
+          // hash-identical either way
+          val conf =
+            if (rocks) Map(graft.streaming.StreamGate.RocksDb,
+              "spark.sql.streaming.stateStore.rocksdb." +
+                "changelogCheckpointing.enabled" -> "true")
+            else Map(provKey -> ("org.apache.spark.sql.execution.streaming." +
+              "state.HDFSBackedStateStoreProvider"))
           val sawRocks = new java.util.concurrent.atomic.AtomicBoolean(false)
           val out = graft.streaming.StreamGate.replayStaged(
-            sc, staged, s"x213_events_$label", "b", 4, "append",
-            progress = p => p.stateOperators.foreach { so =>
-              val it = so.customMetrics.keySet().iterator()
-              while (it.hasNext)
-                if (it.next().toLowerCase.contains("rocksdb"))
-                  sawRocks.set(true)
-            })(streamInnerJoin)
+            s, staged, s"x213_events_$label", "b", 4, "append",
+            progress = p =>
+              if (graft.streaming.StreamGate.usesRocksDb(p)) sawRocks.set(true),
+            conf = conf)(streamInnerJoin)
           out.select(lit(label).as("mode"), col("user_id"), col("s_id"),
             col("p_id"), col("s_us"), col("p_us"),
             lit(sawRocks.get() == rocks).as("prov_ok"))
         }
-        // The two provider legs are INDEPENDENT replays (own cloned
-        // session, own staging dir, own state stores): run them
+        // The two provider legs are INDEPENDENT replays (own session,
+        // own staging dir, own state stores): run them
         // CONCURRENTLY (guide §2.6). Each leg's emissions are unchanged;
         // the final full-tiebreak sort fixes the union order.
         locally {

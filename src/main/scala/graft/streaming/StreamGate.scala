@@ -3,11 +3,13 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 import graft.ops.CheckpointBlocks
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Replays a batch frame through Structured Streaming in REAL micro-batches
@@ -26,6 +28,12 @@ import org.apache.spark.sql.types.StructType
   * over the union of the pinned emissions and the staging directory is
   * deleted, so callers get an ordinary frame with no residue.
   *
+  * This object is the one place that configures a gate stream's session:
+  * each replay reads its stream from its own clone of the caller's
+  * session, which carries the gate confs (see `gateConf`) and the
+  * caller's state-store settings (`conf`, e.g. [[RocksDb]]). The caller's
+  * session conf is never written, and the result frame is built on it.
+  *
   * This is exactly the claim a streaming engine must defend: INCREMENTAL
   * execution converges to the batch answer. The catalog gates (x143/x144)
   * run the same aggregation through this harness and through DuckDB's
@@ -35,62 +43,51 @@ object StreamGate {
 
   private val runSeq = new AtomicLong(0)
 
-  /** A stateful streaming query fixes its state-store partition count from
-    * `spark.sql.shuffle.partitions` at START (it is recorded in the offset
-    * log and kept for the query's life) — so a replay that inherits the
-    * batch width pays that many state-store commits PER OPERATOR PER
-    * MICRO-BATCH, almost all of them for empty partitions at gate corpus
-    * size (measured: the stream-stream joins, 4 stores/partition, fall
-    * 23 s → 7 s going 32 → 8 partitions). State width is a throughput knob
-    * — sized to key cardinality and write rate at scale, not inherited
-    * from the batch side — so the gates pin it for the replay span:
-    * round-12 re-measured the knob on the two heaviest gates (x213
-    * provider-matrix join, x152 inner join) at 8 vs 4 vs 2 and 4 won
-    * (state-store commit count halves vs 8 with no straggler effect at
-    * gate corpus size; 2 gave no further gain). SPARK_GRAFT_GATE_PARTITIONS
-    * overrides for scale experiments — a production replay sizes this to
-    * key cardinality × write rate, not to the local default.
+  /** Every replay runs its stream on its OWN clone of the caller's session,
+    * made once per `replay` / `replayStaged` / `replayStagedRestart` call,
+    * and sets these confs (plus the caller's state-store `conf`) on the
+    * clone only. The caller's conf is never written, so a batch query
+    * running next to a gate (Verify runs 4 at once) plans exactly as it
+    * would without it, and concurrent gates cannot see each other's
+    * settings. The result is still built on the caller's session.
     *
-    * The span also pins Spark's FileSystem-based checkpoint file manager.
-    * The default FileContext-based one costs ~33 ms per small local file,
-    * almost all in `FileContext.rename(OVERWRITE)` on LocalFs: without
-    * libhadoop, RawLocalFileSystem forks `chmod` per permission it sets.
-    * The FileSystem-based one writes it in ~7 ms and keeps the `.crc`
+    * Width: a stateful streaming query fixes its state-store partition
+    * count from `spark.sql.shuffle.partitions` at START (it is recorded in
+    * the offset log and kept for the query's life) — so a replay that
+    * inherits the batch width pays that many state-store commits PER
+    * OPERATOR PER MICRO-BATCH, almost all of them for empty partitions at
+    * gate corpus size (measured: the stream-stream joins, 4
+    * stores/partition, fall 23 s → 7 s going 32 → 8 partitions). State
+    * width is a throughput knob — sized to key cardinality and write rate
+    * at scale, not inherited from the batch side — and round 12 measured
+    * it on the two heaviest gates (x213 provider-matrix join, x152 inner
+    * join) at 8 vs 4 vs 2: 4 won (state-store commit count halves vs 8
+    * with no straggler effect at gate corpus size; 2 gave no further
+    * gain).
+    *
+    * Checkpoint manager: Spark's FileSystem-based one. The default
+    * FileContext-based one costs ~33 ms per small local file, almost all
+    * in `FileContext.rename(OVERWRITE)` on LocalFs: without libhadoop,
+    * RawLocalFileSystem forks `chmod` per permission it sets. The
+    * FileSystem-based one writes it in ~7 ms and keeps the `.crc`
     * sidecars that catch a corrupted checkpoint file on read. A batch
     * writes three such files on the driver in series (source log, offset
     * WAL, commit log) plus a state delta or RocksDB zip per state
     * partition; over the four perfbench gates (4-CPU host) a pass's state
     * commit fell 5.18 s → 1.90 s, commit 1.10 → 0.27 s, offset 0.69 →
-    * 0.28 s, with the same jobs, stages and tasks. Gate checkpoints live under
-    * `java.io.tmpdir`, whose local rename(2) is atomic.
+    * 0.28 s, with the same jobs, stages and tasks. Gate checkpoints live
+    * under `java.io.tmpdir`, whose local rename(2) is atomic.
     *
-    * The span also turns off artifact isolation. Every stream runs on a
-    * clone of its session, and an isolated clone gets its own executor
-    * classloader; Spark's codegen cache is keyed by (context classloader,
-    * source), so each gate run recompiled every task-side class it had
-    * already compiled (measured over the four perfbench gates: 174
-    * compiles of 62 distinct sources per run, 100 of the repeats on task
-    * threads). The clone reads the flag once, when its artifact manager is
-    * first used, so only streams started inside the span share the
-    * session's classloader. Gate streams add no artifacts.
-    *
-    * Depth-guarded flip, PER SESSION (round 13, ADVICE r12): concurrent
-    * gates on one session (Verify runs 4 threads) share one flip and only
-    * the outermost restores (a conf that was unset is unset again), while
-    * gates on different sessions (x205/x213 clone legs) flip and restore
-    * independently — a process-global depth could restore one session's
-    * saved values onto another. All three confs are semantically neutral
-    * catalog-wide, so a batch query planned inside the window only
-    * narrows, never breaks. */
-  private final class GateState(val saved: Seq[(String, Option[String])]) { var depth = 0 }
-  private val gateStates =
-    scala.collection.mutable.Map.empty[SparkSession, GateState]
-
-  /** The replay-span state width (see withGateConf). Public so gates that
-    * clone a session per replay leg (x205/x213) can pin the same width on
-    * the clone, where it also holds after the span ends. */
-  def gatePartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_GATE_PARTITIONS", "4")
+    * Artifact isolation: off. A running stream executes on its own clone
+    * of the session it was started from, and an isolated clone gets its
+    * own executor classloader; Spark's codegen cache is keyed by (context
+    * classloader, source), so each gate run recompiled every task-side
+    * class it had already compiled (measured over the four perfbench
+    * gates: 174 compiles of 62 distinct sources per run, 100 of the
+    * repeats on task threads). A session reads the flag once, when its
+    * artifact manager is first used, and the stream's clone inherits it
+    * from the gate clone. Gate streams add no artifacts. */
+  private[streaming] val gatePartitions = "4"
 
   private val gateConf = Seq(
     "spark.sql.shuffle.partitions" -> gatePartitions,
@@ -98,29 +95,45 @@ object StreamGate {
       "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
     "spark.sql.artifact.isolation.enabled" -> "false")
 
-  private def withGateConf[T](spark: SparkSession)(body: => T): T = {
-    StreamGate.synchronized {
-      val st = gateStates.getOrElseUpdate(spark, {
-        val set = spark.conf.getAll
-        val saved = gateConf.map { case (k, _) => k -> set.get(k) }
-        gateConf.foreach { case (k, v) => spark.conf.set(k, v) }
-        new GateState(saved)
-      })
-      st.depth += 1
-    }
-    try body
-    finally StreamGate.synchronized {
-      val st = gateStates(spark)
-      st.depth -= 1
-      if (st.depth == 0) {
-        st.saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-        gateStates.remove(spark)
-      }
+  /** The `conf` entry that runs a replay's state on RocksDB (the provider
+    * transformWithState requires, and the one whose state spills to disk
+    * instead of executor heap). */
+  val RocksDb: (String, String) = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Whether a batch's state ran on RocksDB, read from its state operators'
+    * own custom metrics: the in-band check that a gate ran on the provider
+    * it claims, not a silent fallback to the heap provider. */
+  def usesRocksDb(p: StreamingQueryProgress): Boolean =
+    p.stateOperators.exists(_.customMetrics.keySet.asScala.exists(_.toLowerCase.contains("rocksdb")))
+
+  /** The run core of every entry point: checks `name`, gives `body` a
+    * per-run root directory (pid + seq: two JVMs or parallel bench runs
+    * replaying the same gate must not overwrite each other's staged input)
+    * and a clone of `spark` carrying the gate confs and `conf`, and
+    * deletes the root afterwards. */
+  private def withRun[T](spark: SparkSession, name: String, conf: Map[String, String])(
+      body: (String, SparkSession) => T): T = {
+    require(name.matches("[A-Za-z0-9_]+"), s"unsafe stream-gate name: $name")
+    val root = s"${System.getProperty("java.io.tmpdir")}/graft_stream_${name}_" +
+      s"${ProcessHandle.current().pid()}_${runSeq.incrementAndGet()}"
+    val gate = GraftSqlBridge.cloneSession(spark)
+    (gateConf ++ conf).foreach { case (k, v) => gate.conf.set(k, v) }
+    try body(root, gate)
+    finally {
+      val p = new Path(root)
+      try p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      catch { case _: Exception => () }
     }
   }
+
+  /** A file stream over `path` on the gate session: one file per trigger,
+    * oldest first. */
+  private def open(gate: SparkSession, path: String, schema: StructType): DataFrame =
+    gate.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .option("latestFirst", "false")
+      .parquet(path)
 
   /** The gate sink: every micro-batch's emission is pinned with an eager
     * `localCheckpoint` (one job, MEMORY_AND_DISK blocks on the executors)
@@ -138,7 +151,7 @@ object StreamGate {
       emitted: ArrayBuffer[DataFrame],
       mode: String,
       checkpoint: Option[String],
-      progress: org.apache.spark.sql.streaming.StreamingQueryProgress => Unit,
+      progress: StreamingQueryProgress => Unit,
       expectedInput: Option[Long] = None): Unit = {
     val writer = transformed.writeStream
       .foreachBatch { (df: Dataset[Row], _: Long) =>
@@ -229,7 +242,7 @@ object StreamGate {
       destDir: String,
       base: Long,
       name: String): Unit = {
-    fs.mkdirs(new org.apache.hadoop.fs.Path(destDir))
+    fs.mkdirs(new Path(destDir))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(nBatches, 4)))
     try {
@@ -240,12 +253,12 @@ object StreamGate {
             input.filter(org.apache.spark.sql.functions.col(batchCol) === i)
               .drop(batchCol).coalesce(1)
               .write.mode("overwrite").parquet(stage)
-            val part = fs.listStatus(new org.apache.hadoop.fs.Path(stage))
+            val part = fs.listStatus(new Path(stage))
               .map(_.getPath).find(_.getName.startsWith("part-"))
               .getOrElse(sys.error(s"stream gate $name: no part file for batch $i"))
-            val dst = new org.apache.hadoop.fs.Path(f"$destDir/batch-$i%04d.parquet")
+            val dst = new Path(f"$destDir/batch-$i%04d.parquet")
             if (!fs.rename(part, dst)) sys.error(s"stream gate $name: rename failed")
-            fs.delete(new org.apache.hadoop.fs.Path(stage), true)
+            fs.delete(new Path(stage), true)
             fs.setTimes(dst, base + i * 2000L, -1)
           }
         })
@@ -280,7 +293,9 @@ object StreamGate {
     * which late rows are admitted or dropped) is a function of which rows
     * each batch carried.
     *
-    * `batchCol` is dropped before the stream sees the rows. */
+    * `batchCol` is dropped before the stream sees the rows. `conf` holds
+    * the stream's extra state-store settings (e.g. [[RocksDb]]), set on
+    * the replay's own session next to the gate confs. */
   def replayStaged(
       spark: SparkSession,
       input: DataFrame,
@@ -288,51 +303,36 @@ object StreamGate {
       batchCol: String,
       nBatches: Int,
       mode: String = "append",
-      progress: org.apache.spark.sql.streaming.StreamingQueryProgress => Unit = _ => (),
-      availableNow: Boolean = true)(
-      transform: DataFrame => DataFrame): DataFrame = {
-    require(name.matches("[A-Za-z0-9_]+"), s"unsafe stream-gate name: $name")
-    val seq = runSeq.incrementAndGet()
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_stream_${name}_" +
-      s"${ProcessHandle.current().pid()}_$seq"
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = System.currentTimeMillis() - (nBatches + 1) * 2000L
-    try {
+      progress: StreamingQueryProgress => Unit = _ => (),
+      availableNow: Boolean = true,
+      conf: Map[String, String] = Map.empty)(
+      transform: DataFrame => DataFrame): DataFrame =
+    withRun(spark, name, conf) { (dir, gate) =>
+      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val base = System.currentTimeMillis() - (nBatches + 1) * 2000L
       stageBatches(input, batchCol, nBatches, fs, dir, dir, base, name)
-      val schema = input.drop(batchCol).schema
-      withGateConf(spark) {
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1)
-          .option("latestFirst", "false")
-          .parquet(s"$dir/batch-*.parquet")
-        val transformed = transform(stream)
-        // The explicit-stop target = rows the source will consume = rows
-        // actually staged. Summing the staged files' parquet footer counts
-        // (driver-only metadata reads) replaces the former Spark job that
-        // re-filtered and re-counted the input frame — same number by
-        // construction (stageBatches wrote exactly the batchCol<nBatches
-        // rows), no recompute of the input lineage.
-        val expected =
-          if (availableNow) None
-          else Some(
-            fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-              .filter(_.getPath.getName.startsWith("batch-"))
-              .map { st =>
-                val in = org.apache.parquet.hadoop.util.HadoopInputFile
-                  .fromStatus(st, spark.sparkContext.hadoopConfiguration)
-                val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-                try r.getRecordCount finally r.close()
-              }.sum)
-        val emitted = ArrayBuffer.empty[DataFrame]
-        runDistributed(transformed, emitted, mode, None, progress, expected)
-        readBack(spark, emitted, transformed.schema)
-      }
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      try fs.delete(p, true) catch { case _: Exception => () }
+      val transformed = transform(open(gate, s"$dir/batch-*.parquet", input.drop(batchCol).schema))
+      // The explicit-stop target = rows the source will consume = rows
+      // actually staged. Summing the staged files' parquet footer counts
+      // (driver-only metadata reads) replaces the former Spark job that
+      // re-filtered and re-counted the input frame — same number by
+      // construction (stageBatches wrote exactly the batchCol<nBatches
+      // rows), no recompute of the input lineage.
+      val expected =
+        if (availableNow) None
+        else Some(
+          fs.listStatus(new Path(dir))
+            .filter(_.getPath.getName.startsWith("batch-"))
+            .map { st =>
+              val in = org.apache.parquet.hadoop.util.HadoopInputFile
+                .fromStatus(st, spark.sparkContext.hadoopConfiguration)
+              val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+              try r.getRecordCount finally r.close()
+            }.sum)
+      val emitted = ArrayBuffer.empty[DataFrame]
+      runDistributed(transformed, emitted, mode, None, progress, expected)
+      readBack(spark, emitted, transformed.schema)
     }
-  }
 
   /** Replays `input` like [[replayStaged]] but KILLS the query after
     * `restartAfter` micro-batches and starts a brand-new query from the
@@ -343,8 +343,9 @@ object StreamGate {
     * recovers BOTH the source offsets (staged files 0..restartAfter-1 must
     * not be reprocessed — a fresh start would re-emit their rows) and the
     * operator state (keys seen before the restart must still suppress /
-    * merge after it). Both runs pin their emissions into one buffer, and
-    * the result is the union of both runs' emissions.
+    * merge after it). Both runs use the replay's one session and pin their
+    * emissions into one buffer, and the result is the union of both runs'
+    * emissions.
     *
     * Failure modes are all hash-visible downstream: lost offsets duplicate
     * every pre-restart emission; lost state re-emits or under-aggregates
@@ -360,52 +361,38 @@ object StreamGate {
       nBatches: Int,
       restartAfter: Int)(
       transform: DataFrame => DataFrame): DataFrame = {
-    require(name.matches("[A-Za-z0-9_]+"), s"unsafe stream-gate name: $name")
     require(restartAfter > 0 && restartAfter < nBatches,
       s"restartAfter must split the replay: $restartAfter of $nBatches")
-    val seq = runSeq.incrementAndGet()
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_stream_${name}_" +
-      s"${ProcessHandle.current().pid()}_$seq"
-    val dir = s"$root/in"
-    val hold = s"$root/hold"
-    val ckpt = s"$root/ckpt"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = System.currentTimeMillis() - (nBatches + 1) * 2000L
-    try {
-      fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
+    withRun(spark, name, Map.empty) { (root, gate) =>
+      val dir = s"$root/in"
+      val hold = s"$root/hold"
+      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val base = System.currentTimeMillis() - (nBatches + 1) * 2000L
+      fs.mkdirs(new Path(dir))
       // Stage every batch as one pinned-mtime file in a holding area;
       // files are revealed to the watched dir in two waves around the kill.
       stageBatches(input, batchCol, nBatches, fs, root, hold, base, name)
       def reveal(from: Int, until: Int): Unit =
         for (i <- from until until) {
           val n = f"batch-$i%04d.parquet"
-          if (!fs.rename(new org.apache.hadoop.fs.Path(s"$hold/$n"),
-            new org.apache.hadoop.fs.Path(s"$dir/$n")))
+          if (!fs.rename(new Path(s"$hold/$n"), new Path(s"$dir/$n")))
             sys.error(s"stream gate $name: reveal failed for $n")
         }
       val schema = input.drop(batchCol).schema
       val emitted = ArrayBuffer.empty[DataFrame]
       @volatile var outSchema: StructType = null
-      def run(): Unit = withGateConf(spark) {
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1)
-          .option("latestFirst", "false")
-          .parquet(s"$dir/batch-*.parquet")
-        val transformed = transform(stream)
+      def run(): Unit = {
+        val transformed = transform(open(gate, s"$dir/batch-*.parquet", schema))
         outSchema = transformed.schema
         // both runs APPEND to one buffer: the union of the two runs'
         // emissions, distributed (no driver-side row buffering)
-        runDistributed(transformed, emitted, "append", Some(ckpt), _ => ())
+        runDistributed(transformed, emitted, "append", Some(s"$root/ckpt"), _ => ())
       }
       reveal(0, restartAfter)
       run() // run 1: first wave, then the query dies (clean AvailableNow drain)
       reveal(restartAfter, nBatches)
       run() // run 2: NEW query, same checkpoint — offsets + state recovered
       readBack(spark, emitted, outSchema)
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(root)
-      try fs.delete(p, true) catch { case _: Exception => () }
     }
   }
 
@@ -418,31 +405,16 @@ object StreamGate {
       input: DataFrame,
       name: String,
       files: Int = 8,
-      mode: String = "complete")(transform: DataFrame => DataFrame): DataFrame = {
-    require(name.matches("[A-Za-z0-9_]+"), s"unsafe stream-gate name: $name")
-    // Per-run directory (pid + seq): two concurrent JVMs or parallel bench
-    // runs replaying the same gate must not overwrite each other's staged
-    // input between write and streaming read. Deleted after the replay.
-    val seq = runSeq.incrementAndGet()
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_stream_${name}_" +
-      s"${ProcessHandle.current().pid()}_$seq"
-    val dir = s"$root/in"
-    input.repartition(files).write.mode("overwrite").parquet(dir)
-    try withGateConf(spark) {
+      mode: String = "complete")(transform: DataFrame => DataFrame): DataFrame =
+    withRun(spark, name, Map.empty) { (root, gate) =>
+      val dir = s"$root/in"
+      input.repartition(files).write.mode("overwrite").parquet(dir)
       // the staged files carry exactly input's schema (we just wrote them):
       // reuse it instead of re-inferring from footers — replayStaged already
       // does this, and the file source treats provided nullability loosely
-      val schema = input.schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir)
-      val transformed = transform(stream)
+      val transformed = transform(open(gate, dir, input.schema))
       val emitted = ArrayBuffer.empty[DataFrame]
       runDistributed(transformed, emitted, mode, None, _ => ())
       readBack(spark, emitted, transformed.schema)
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(root)
-      try p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      catch { case _: Exception => () }
     }
-  }
 }

@@ -25,9 +25,10 @@ object GraftSqlBridge {
   /** An isolated copy of the session (shared context, independent runtime
     * conf — inherited, then divergeable): Spark 4 moved `cloneSession`
     * onto the classic implementation only, and `newSession()` would DROP
-    * runtime conf already set on the parent. Used by gates that must flip
-    * session-global settings (state-store provider) without racing
-    * concurrently-running catalog neighbors. */
+    * runtime conf already set on the parent. StreamGate runs each replay
+    * on one, so its stream settings (state width, state-store provider)
+    * never reach the caller's session or a concurrently running catalog
+    * neighbor. */
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
 }

@@ -19,7 +19,9 @@ class RunningUserStatsSpec extends SparkSpec {
   test("transformWithState running stats over a stream match the batch aggregate") {
     // transformWithState requires the RocksDB state store provider
     val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
+    // getAll, not getOption: getOption returns the registered default, and
+    // restoring that would leave the default SET on the shared session
+    val prev = spark.conf.getAll.get(key)
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {

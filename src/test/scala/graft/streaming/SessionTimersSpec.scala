@@ -30,18 +30,11 @@ class SessionTimersSpec extends SparkSpec {
   private def run(rows: Seq[(Int, Long, Long, Long)]): Set[(Long, Long, Long, Long)] = {
     val df = rows.toDF("b", "user_id", "event_id", "us")
       .withColumn("ts", timestamp_micros(col("us")))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val out =
-      try StreamGate.replayStaged(spark, df, "stspec", "b", 4, "append") { s =>
-        SessionTimers.sessions(s.withWatermark("ts", "10 seconds")
-          .as[SessionTimers.EventIn](org.apache.spark.sql.Encoders.product)).toDF()
-      } finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
+    val out = StreamGate.replayStaged(spark, df, "stspec", "b", 4, "append",
+      conf = Map(StreamGate.RocksDb)) { s =>
+      SessionTimers.sessions(s.withWatermark("ts", "10 seconds")
+        .as[SessionTimers.EventIn](org.apache.spark.sql.Encoders.product)).toDF()
+    }
     out.as[(Long, Long, Long, Long)].collect().toSet
   }
 

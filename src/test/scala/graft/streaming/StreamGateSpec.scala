@@ -108,36 +108,54 @@ class StreamGateSpec extends SparkSpec {
     assert(out.select("id").as[Long].collect().sorted.toSeq == (1L to 80L))
   }
 
-  // also covers the third gate conf, artifact isolation
-  test("replay restores the session's shuffle width and checkpoint manager; unset stays unset") {
+  test("a replay never writes the caller's session conf") {
     val widthKey = "spark.sql.shuffle.partitions"
     val fmKey = "spark.sql.streaming.checkpointFileManagerClass"
     val isoKey = "spark.sql.artifact.isolation.enabled"
     val pkg = "org.apache.spark.sql.execution.streaming.checkpointing."
     val width = spark.conf.get(widthKey)
-    assert(!spark.conf.getAll.contains(fmKey))
-    assert(!spark.conf.getAll.contains(isoKey))
-    var inside: (String, Option[String], Option[String]) = null
+    // getAll holds only what is set (getOption would return defaults)
+    type Confs = (String, Option[String], Option[String])
+    def confs(s: org.apache.spark.sql.SparkSession): Confs = {
+      val set = s.conf.getAll
+      (s.conf.get(widthKey), set.get(fmKey), set.get(isoKey))
+    }
+    var stream, caller: Confs = null
     def replayOnce(): Unit =
       StreamGate.replay(spark, Seq(1L, 2L).toDF("id"), "sgspec_conf", files = 2, mode = "append") {
-        df => inside = (spark.conf.get(widthKey), spark.conf.getOption(fmKey), spark.conf.getOption(isoKey)); df
+        df => stream = confs(df.sparkSession); caller = confs(spark); df
       }.collect()
     spark.conf.set(widthKey, "3")
     try {
       replayOnce()
-      assert(inside == ((StreamGate.gatePartitions, Some(pkg + "FileSystemBasedCheckpointFileManager"), Some("false"))))
-      assert(spark.conf.get(widthKey) == "3")
-      assert(!spark.conf.getAll.contains(fmKey))
-      assert(!spark.conf.getAll.contains(isoKey))
-      // an explicitly set manager comes back as it was, too
+      assert(stream == ((StreamGate.gatePartitions, Some(pkg + "FileSystemBasedCheckpointFileManager"), Some("false"))))
+      assert(caller == (("3", None, None)))
+      assert(confs(spark) == (("3", None, None)))
+      // an explicitly set manager stays on the caller; the stream still
+      // gets the FileSystem-based one
       spark.conf.set(fmKey, pkg + "FileContextBasedCheckpointFileManager")
       replayOnce()
-      assert(spark.conf.get(fmKey) == pkg + "FileContextBasedCheckpointFileManager")
-      assert(spark.conf.get(widthKey) == "3")
+      assert(stream._2.contains(pkg + "FileSystemBasedCheckpointFileManager"))
+      assert(caller == (("3", Some(pkg + "FileContextBasedCheckpointFileManager"), None)))
+      assert(confs(spark) == caller)
     } finally {
       spark.conf.set(widthKey, width)
       spark.conf.unset(fmKey)
     }
+  }
+
+  test("a replay's state-store conf reaches its stream and not the caller") {
+    val key = StreamGate.RocksDb._1
+    val before = spark.conf.getAll.get(key)
+    assert(!before.contains(StreamGate.RocksDb._2))
+    var rocks = false
+    val in = (1L to 40L).map(i => (i % 6, (i % 2).toInt)).toDF("k", "stage_b")
+    val out = StreamGate.replayStaged(spark, in, "sgspec_rocksdb", "stage_b", 2, "complete",
+      progress = p => rocks ||= StreamGate.usesRocksDb(p),
+      conf = Map(StreamGate.RocksDb))(_.groupBy("k").count())
+    assert(rocks)
+    assert(out.count() == 6)
+    assert(spark.conf.getAll.get(key) == before)
   }
 
   test("checkpoint files keep their .crc sidecars: offsets, commits and state deltas") {
