@@ -1,5 +1,8 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -29,6 +32,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   */
 object BucketedGraphStore {
 
+  private val json = new ObjectMapper()
+
   /** Writes the graph as two bucketed tables `<prefix>_nodes` /
     * `<prefix>_edges` rooted at `path`. */
   def save(g: GraphTable, prefix: String, path: String, buckets: Int = 64): Unit = {
@@ -46,15 +51,15 @@ object BucketedGraphStore {
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .option("path", location)
       .saveAsTable(table)
-    // schema json embedded verbatim as the LAST field so load() can slice
-    // it out without a JSON parser (no JSON library in the dep budget)
-    val meta =
-      s"""{"buckets": $buckets, "bucketCols": [${bucketCols.map(quote).mkString(", ")}], """ +
-        s""""schema": ${df.schema.json}}"""
+    val meta = json.createObjectNode()
+    meta.put("buckets", buckets)
+    val cols = meta.putArray("bucketCols")
+    bucketCols.foreach(cols.add)
+    meta.set[JsonNode]("schema", json.readTree(df.schema.json))
     val p = new Path(location, "_graft_store.json")
     val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
-    try out.write(meta.getBytes("UTF-8")) finally out.close()
+    try json.writeValue(out: java.io.OutputStream, meta) finally out.close()
   }
 
   /** Reads the bucketed pair back, re-registering catalog entries from the
@@ -94,13 +99,10 @@ object BucketedGraphStore {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(p), s"no bucketed table at $location (missing _graft_store.json)")
     val in = fs.open(p)
-    val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    // sidecar is machine-written with the schema as the verbatim last field
-    val schemaJson = raw.substring(raw.indexOf("\"schema\": ") + 10, raw.length - 1)
-    val buckets = """"buckets":\s*(\d+)""".r.findFirstMatchIn(raw).get.group(1).toInt
-    val bucketCols = """"bucketCols":\s*\[([^\]]*)\]""".r.findFirstMatchIn(raw).get.group(1)
-      .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+    val meta = try json.readTree(in) finally in.close()
+    val buckets = meta.get("buckets").asInt
+    val bucketCols = meta.get("bucketCols").asScala.map(_.asText)
+    val schema = DataType.fromJson(meta.get("schema").toString).asInstanceOf[StructType]
     val colsDdl = schema.toDDL
     val bucketDdl = bucketCols.mkString(", ")
     spark.sql(
@@ -115,7 +117,4 @@ object BucketedGraphStore {
     spark.sql(s"DROP TABLE IF EXISTS ${prefix}_nodes")
     spark.sql(s"DROP TABLE IF EXISTS ${prefix}_edges")
   }
-
-  private def quote(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 }

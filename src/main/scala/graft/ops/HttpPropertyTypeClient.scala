@@ -4,6 +4,11 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.ObjectMapper
+
 /** Default production transport for [[Enrichment]] (reference R8: a live
   * HTTP POST per concept, /root/reference/main.py:372-374). One instance is
   * created per partition by `Enrichment.enrich`'s `clientFactory`, so the
@@ -68,41 +73,26 @@ final class HttpPropertyTypeClient(
 
 object HttpPropertyTypeClient {
 
-  /** Extracts the `event_and_property_types` string array from a JSON
-    * response body. Hand-rolled scanner (no JSON library in the dependency
-    * budget): finds the key, then collects each double-quoted string up to
-    * the closing `]`, honoring backslash escapes. Absent key or empty array
-    * → no entries, matching the reference's absent-field skip. */
+  private val json = new ObjectMapper()
+
+  /** The top-level `event_and_property_types` string array of a response
+    * body. An absent or null key, or an empty array, is no entries (the
+    * reference's absent-field skip); a body that is not a JSON object, or
+    * a key that is not an array of strings, breaks the service contract
+    * and fails the fetch. */
   private[ops] def parseEntries(body: String): Seq[String] = {
-    val keyIdx = body.indexOf("\"event_and_property_types\"")
-    if (keyIdx < 0) return Seq.empty
-    val open = body.indexOf('[', keyIdx)
-    if (open < 0) return Seq.empty
-    val out = Seq.newBuilder[String]
-    var i = open + 1
-    var inStr = false
-    val cur = new StringBuilder
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (inStr) {
-        if (c == '\\' && i + 1 < body.length) {
-          body.charAt(i + 1) match {
-            case 'n' => cur.append('\n'); i += 1
-            case 't' => cur.append('\t'); i += 1
-            case 'r' => cur.append('\r'); i += 1
-            case 'u' if i + 5 < body.length =>
-              cur.append(Integer.parseInt(body.substring(i + 2, i + 6), 16).toChar)
-              i += 5
-            case other => cur.append(other); i += 1 // \" \\ \/ and friends
-          }
-        } else if (c == '"') { out += cur.result(); cur.clear(); inStr = false }
-        else cur.append(c)
-      } else {
-        if (c == '"') inStr = true
-        else if (c == ']') return out.result()
+    // a JsonProcessingException is an IOException, which fetch retries
+    val root =
+      try json.readTree(body)
+      catch { case e: JsonProcessingException =>
+        throw new IllegalStateException(s"enrichment service sent invalid JSON: ${e.getOriginalMessage}", e)
       }
-      i += 1
-    }
-    out.result()
+    if (!root.isObject)
+      throw new IllegalStateException(s"enrichment service sent a JSON ${root.getNodeType}, not an object")
+    val entries = root.get("event_and_property_types")
+    if (entries == null || entries.isNull) Seq.empty
+    else if (entries.isArray && entries.asScala.forall(_.isTextual)) entries.asScala.map(_.asText).toSeq
+    else throw new IllegalStateException(
+      s"enrichment service sent event_and_property_types as $entries, not an array of strings")
   }
 }

@@ -1,13 +1,13 @@
 package graft.queries
 
 import graft.Tables._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import QueryDef.dsum
 import graft.functions.VectorFunctions
-import graft.ops.GraphAlgos
+import graft.ops.{Concurrently, GraphAlgos}
 
 /** Training-data-pipeline operators (north-star extensions): deduplication
   * (exact / MinHash+LSH / SimHash / n-gram Jaccard / embedding near-dup),
@@ -23,6 +23,11 @@ import graft.ops.GraphAlgos
   * strings, which equals the numeric min.
   */
 object PipelineQueries {
+
+  /** The micro-batch a stream gate stages an `events` row in: its 8-day
+    * window since 2024-01-01, clamped to batches 0..3. */
+  private def eventBatch: Column = expr(
+    "CAST(least(greatest(CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT), 0), 3) AS INT)")
 
   /** documents ∪ id-shifted clone — the near-dup test corpus. */
   private def docCorpus(s: SparkSession, d: String): DataFrame = {
@@ -1176,17 +1181,12 @@ object PipelineQueries {
             // oracle (cast-sum-to-double / count)
             round(dsum(col(c)).cast(DoubleType) / count(col(c)), 6).as(s"me_$c"))
         }
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2 * cols.size + 1)
-        implicit val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
-        val wideF = Future(li.agg(count(lit(1)).as("n_rows"), aggs: _*).localCheckpoint(eager = true))
-        val ndF = Future.sequence(
-          // non-null distincts: DataFrame.distinct() would count NULL as a
-          // value, but the oracle's count(DISTINCT c) excludes NULLs
-          cols.map(c => Future(
-            c -> li.select(col(c)).filter(col(c).isNotNull).distinct().count())))
-        val mdF = Future {
+        val wideAgg = li.agg(count(lit(1)).as("n_rows"), aggs: _*)
+        // non-null distincts: DataFrame.distinct() would count NULL as a
+        // value, but the oracle's count(DISTINCT c) excludes NULLs
+        val distincts = cols.map(c =>
+          () => li.select(col(c)).filter(col(c).isNotNull).distinct().count())
+        def medians = {
           // PRODUCTION medians: one GK-sketch pass for all columns (bounded
           // state, map-side merge — the 100 TB form; the former per-column
           // exact `percentile` jobs were the catalog's textbook parity
@@ -1215,22 +1215,11 @@ object PipelineQueries {
             c -> (lt <= 0.505 * n && le >= 0.495 * n)
           }.toMap
         }
-        // bounded wait (a hung job must not wait forever), and on ANY
-        // failure shutdownNow() so queued sibling futures never start —
-        // plain shutdown() would let them keep submitting Spark jobs
-        // against the session after the query has already failed. The
-        // bound is generous and env-tunable so a legitimately long
-        // large-SF run is not converted into a failure.
-        import scala.concurrent.duration._
-        val waitCap = sys.env.getOrElse("GRAFT_PROFILE_TIMEOUT_MIN", "60").toInt.minutes
-        val (wide, nd, md) =
-          try {
-            val r = (Await.result(wideF, waitCap),
-              Await.result(ndF, waitCap).toMap,
-              Await.result(mdF, waitCap))
-            pool.shutdown()
-            r
-          } catch { case e: Throwable => pool.shutdownNow(); throw e }
+        // the wide pass, the four distinct counts and the median pass all
+        // run at once (a nested call is cancelled with its outer call)
+        val (wide, (nds, md)) = Concurrently.both(s)(wideAgg.localCheckpoint(eager = true),
+          Concurrently.both(s)(Concurrently.all(s)(distincts), medians))
+        val nd = cols.zip(nds).toMap
         cols.map { c =>
           wide.select(lit(c).as("column"), col("n_rows"),
             col(s"nn_$c").as("n_non_null"), lit(nd(c)).as("n_distinct"),
@@ -8847,9 +8836,7 @@ object PipelineQueries {
       (s, d) => {
         val staged = events(s, d)
           .select(col("ts"), col("event_type"), col("value"),
-            expr("""CAST(least(greatest(
-                   |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
-                   |  0), 3) AS INT)""".stripMargin).as("q"),
+            eventBatch.as("q"),
             col("event_id"))
           .select(col("ts"), col("event_type"), col("value"),
             expr("CAST(CASE WHEN event_id % 7 = 3 THEN least(q + 2, 3) " +
@@ -8913,9 +8900,7 @@ object PipelineQueries {
         val staged = events(s, d)
           .select(col("user_id"), col("event_type"),
             date_trunc("day", col("ts")).as("ts_day"),
-            expr("""CAST(least(greatest(
-                   |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
-                   |  0), 3) AS INT)""".stripMargin).as("q"),
+            eventBatch.as("q"),
             col("event_id"))
           .select(col("user_id"), col("event_type"), col("ts_day"),
             expr("CAST(CASE WHEN event_id % 5 = 2 THEN least(q + 2, 3) " +
@@ -8972,9 +8957,7 @@ object PipelineQueries {
         val staged = events(s, d)
           .filter(col("event_type").isin("signup", "purchase"))
           .select(col("event_id"), col("user_id"), col("event_type"), col("ts"),
-            expr("""CAST(least(greatest(
-                   |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
-                   |  0), 3) AS INT)""".stripMargin).as("b"))
+            eventBatch.as("b"))
         val out = graft.streaming.StreamGate.replayStaged(
           s, staged, "x152_events", "b", 4, "append")(streamInnerJoin)
         out.orderBy("user_id", "s_id", "p_id")
@@ -9139,9 +9122,7 @@ object PipelineQueries {
         val staged = events(s, d)
           .select(col("user_id"), col("event_id"),
             floor(col("value") * 100).cast(LongType).as("cents"),
-            expr("""CAST(least(greatest(
-                   |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
-                   |  0), 3) AS INT)""".stripMargin).as("b"))
+            eventBatch.as("b"))
         val out =
           graft.streaming.StreamGate.replayStaged(
             s, staged, "x154_events", "b", 4, "append",
@@ -9194,9 +9175,7 @@ object PipelineQueries {
         val staged = events(s, d)
           .filter(col("event_type").isin("signup", "purchase"))
           .select(col("event_id"), col("user_id"), col("event_type"), col("ts"),
-            expr("""CAST(least(greatest(
-                   |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
-                   |  0), 3) AS INT)""".stripMargin).as("q"))
+            eventBatch.as("q"))
           .select(col("event_id"), col("user_id"), col("event_type"), col("ts"),
             expr("CAST(CASE WHEN event_type = 'purchase' AND event_id % 6 = 1 " +
               "THEN least(q + 2, 3) ELSE q END AS INT)").as("b"))
@@ -9296,9 +9275,7 @@ object PipelineQueries {
         val staged = events(s, d)
           .select(
             (col("event_id") % 997).cast(LongType).as("dup_key"),
-            expr("""CAST(least(greatest(
-                   |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
-                   |  0), 3) AS INT)""".stripMargin).as("stage_b"))
+            eventBatch.as("stage_b"))
           .withColumn("b", col("stage_b").cast(LongType))
         val out = graft.streaming.StreamGate.replayStagedRestart(
           s, staged, "x156_events", "stage_b", 4, 2) { stream =>
@@ -9336,9 +9313,7 @@ object PipelineQueries {
         val staged = events(s, d)
           .select(col("user_id"), col("event_id"), col("ts"),
             unix_micros(col("ts")).as("us"),
-            expr("""CAST(least(greatest(
-                   |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
-                   |  0), 3) AS INT)""".stripMargin).as("b"))
+            eventBatch.as("b"))
         val out =
           graft.streaming.StreamGate.replayStaged(
             s, staged, "x157_events", "b", 4, "append",
@@ -9863,8 +9838,7 @@ object PipelineQueries {
       "x164_stream_static_join",
       (s, d) => {
         val dim = broadcast(
-          s.read.parquet(s"$d/customer.parquet")
-            .select(col("c_custkey"), col("c_mktsegment")))
+          customer(s, d).select(col("c_custkey"), col("c_mktsegment")))
         val out = graft.streaming.StreamGate.replay(
           s, events(s, d).select(col("user_id"), col("event_type"), col("value")),
           name = "x164_events", files = 4, mode = "append") { stream =>
@@ -9981,9 +9955,7 @@ object PipelineQueries {
       (s, d) => {
         val staged = events(s, d)
           .select(col("user_id"), col("event_id"),
-            expr("""CAST(least(greatest(
-                   |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
-                   |  0), 3) AS INT)""".stripMargin).as("b"))
+            eventBatch.as("b"))
         val out = graft.streaming.StreamGate.replayStaged(
           s, staged, "x166_events", "b", 4, "append") { stream =>
           graft.streaming.StatefulEnrichment.annotate(
@@ -10218,9 +10190,7 @@ object PipelineQueries {
         val staged = events(s, d)
           .select(col("ts"), col("event_type"),
             floor(col("value") * 100).cast(LongType).as("cents"),
-            expr("""CAST(least(greatest(
-                   |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
-                   |  0), 3) AS INT)""".stripMargin).as("b"))
+            eventBatch.as("b"))
         val out = graft.streaming.StreamGate.replayStaged(
           s, staged, "x169_events", "b", 4, "update") { stream =>
           stream
@@ -11206,9 +11176,7 @@ object PipelineQueries {
       (s, d) => {
         val staged = events(s, d)
           .select(col("ts"), col("event_type"), col("value"),
-            expr("""CAST(least(greatest(
-                   |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
-                   |  0), 3) AS INT)""".stripMargin).as("q"),
+            eventBatch.as("q"),
             col("event_id"))
           .select(col("ts"), col("event_type"), col("value"),
             expr("CAST(CASE WHEN event_id % 6 = 1 THEN least(q + 2, 3) " +
@@ -12362,9 +12330,7 @@ object PipelineQueries {
         val staged = events(s, d)
           .select(col("user_id"), col("event_id"),
             floor(col("value") * 100).cast(LongType).as("cents"),
-            expr("""CAST(least(greatest(
-                   |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
-                   |  0), 3) AS INT)""".stripMargin).as("b"))
+            eventBatch.as("b"))
         // NOTE (round 12): changelog checkpointing measured SLOWER here —
         // this gate's TTL state is tiny, so snapshot upload is already
         // cheap and the changelog stream is pure added machinery (x213's
@@ -12968,9 +12934,7 @@ object PipelineQueries {
         val staged = events(s, d)
           .select(col("user_id"), col("event_id"),
             floor(col("value") * 100).cast(LongType).as("cents"),
-            expr("""CAST(least(greatest(
-                   |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
-                   |  0), 3) AS INT)""".stripMargin).as("b"))
+            eventBatch.as("b"))
         def runOn(changelog: Boolean, label: String) = {
           val sawRocks = new java.util.concurrent.atomic.AtomicBoolean(false)
           val out = graft.streaming.StreamGate.replayStaged(
@@ -12994,23 +12958,13 @@ object PipelineQueries {
         }
         // The two persistence-mode legs are INDEPENDENT replays (own
         // session, own staging dir, own state stores): run them
-        // CONCURRENTLY (guide §2.6 — actions are only sequential because
-        // driver code calls them sequentially). Each leg's emissions are
-        // unchanged; the final full-tiebreak sort fixes the union order.
-        locally {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-          implicit val ec =
-            scala.concurrent.ExecutionContext.fromExecutor(pool)
-          val snapF = Future(runOn(changelog = false, "snapshot"))
-          val logF = Future(runOn(changelog = true, "changelog"))
-          val (snap, log) =
-            try Await.result(snapF.zip(logF), Duration.Inf)
-            finally pool.shutdown()
-          snap.unionByName(log)
-            .orderBy("mode", "user_id", "kind", "a", "c")
-        }
+        // concurrently; a failed leg stops the other's stream. Each leg's
+        // emissions are unchanged; the final full-tiebreak sort fixes the
+        // union order.
+        val (snap, log) = Concurrently.both(s)(
+          runOn(changelog = false, "snapshot"), runOn(changelog = true, "changelog"))
+        snap.unionByName(log)
+          .orderBy("mode", "user_id", "kind", "a", "c")
       },
       Some("""WITH e AS (SELECT user_id, event_id,
              |    CAST(floor("value" * 100) AS BIGINT) AS cents,
@@ -13119,24 +13073,20 @@ object PipelineQueries {
         // |q|²+|n|²−2q·n with the native dot (round 12, x210's referee
         // form): norms once per side, the per-pair work is one codegen dot
         // loop. Round 13: the exact side reads only the e/q checkpoints,
-        // so its materialization is forked here and overlaps the whole ADC
-        // branch below (guide §2.6) instead of running serially inside the
-        // final assembly job. Daemon EC: a failure on the main path must
-        // never leave a pool thread pinning the JVM.
-        val exactF = scala.concurrent.Future(
-          e.select(col("vec_id").as("n_id"), col("qv").as("n_qv"))
-            .withColumn("n2",
-              graft.functions.IntDotProduct.intDot(col("n_qv"), col("n_qv")))
-            .join(broadcast(q.withColumn("q2",
-              graft.functions.IntDotProduct.intDot(col("q_qv"), col("q_qv")))),
-              col("n_id") =!= col("q_id"))
-            .withColumn("dist", col("q2") + col("n2") - lit(2L) *
-              graft.functions.IntDotProduct.intDot(col("q_qv"), col("n_qv")))
-            .withColumn("rn", row_number().over(
-              Window.partitionBy("q_id").orderBy(col("dist"), col("n_id"))))
-            .filter(col("rn") <= 10)
-            .select("q_id", "n_id")
-            .localCheckpoint(true))(scala.concurrent.ExecutionContext.global)
+        // so its materialization overlaps the ADC branch below instead of
+        // running serially inside the final assembly job.
+        val exactDf = e.select(col("vec_id").as("n_id"), col("qv").as("n_qv"))
+          .withColumn("n2",
+            graft.functions.IntDotProduct.intDot(col("n_qv"), col("n_qv")))
+          .join(broadcast(q.withColumn("q2",
+            graft.functions.IntDotProduct.intDot(col("q_qv"), col("q_qv")))),
+            col("n_id") =!= col("q_id"))
+          .withColumn("dist", col("q2") + col("n2") - lit(2L) *
+            graft.functions.IntDotProduct.intDot(col("q_qv"), col("n_qv")))
+          .withColumn("rn", row_number().over(
+            Window.partitionBy("q_id").orderBy(col("dist"), col("n_id"))))
+          .filter(col("rn") <= 10)
+          .select("q_id", "n_id")
         val qd = q.crossJoin(broadcast(cb))
           .withColumn("qd", expr(l2("slice(q_qv, sb * 8 + 1, 8)", "cvec")))
           .select(col("q_id"), col("sb").as("qsb"), col("cw"), col("qd"))
@@ -13146,16 +13096,16 @@ object PipelineQueries {
           .filter(col("vec_id") =!= col("q_id"))
           .groupBy(col("q_id"), col("vec_id").as("n_id"))
           .agg(sum(col("qd")).as("adc"))
-        val atop = ap
+        val atopDf = ap
           .withColumn("rn", row_number().over(
             Window.partitionBy("q_id").orderBy(col("adc"), col("n_id"))))
           .filter(col("rn") <= 10)
           .select("q_id", "n_id", "adc")
-          .localCheckpoint(true) // overlap + adc_sum both read it
-        // join the concurrently-materialized exact referee (forked above);
-        // both sides are 10·|queries| rows — broadcast the exact side
-        val exact = scala.concurrent.Await.result(
-          exactF, scala.concurrent.duration.Duration(600, "s"))
+        // the exact referee and the ADC top-10 (read by overlap + adc_sum)
+        // materialize concurrently; both sides are 10·|queries| rows —
+        // broadcast the exact side
+        val (exact, atop) = Concurrently.both(s)(
+          exactDf.localCheckpoint(true), atopDf.localCheckpoint(true))
         val ov = atop.join(broadcast(exact), Seq("q_id", "n_id"))
           .groupBy("q_id").agg(count(lit(1)).as("n_overlap"))
         val asum = atop.groupBy("q_id").agg(sum(col("adc")).as("adc_sum"))
@@ -13258,9 +13208,7 @@ object PipelineQueries {
         val staged = events(s, d)
           .filter(col("event_type").isin("signup", "purchase"))
           .select(col("event_id"), col("user_id"), col("event_type"), col("ts"),
-            expr("""CAST(least(greatest(
-                   |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
-                   |  0), 3) AS INT)""".stripMargin).as("q"))
+            eventBatch.as("q"))
           .select(col("event_id"), col("user_id"), col("event_type"), col("ts"),
             expr("CAST(CASE WHEN event_type = 'purchase' AND event_id % 6 = 1 " +
               "THEN least(q + 2, 3) ELSE q END AS INT)").as("b"))
@@ -13615,84 +13563,80 @@ object PipelineQueries {
             Window.partitionBy("q_id").orderBy(col("dist"), col("n_id"))))
           .filter(col("rn") <= 10)
           .select("q_id", "n_id")
-        // daemon EC: a failure on the main path must never leave a
-        // non-daemon pool thread pinning the JVM
-        val exactF = scala.concurrent.Future(
-          exactDf.localCheckpoint(true))(
-          scala.concurrent.ExecutionContext.global)
-        // —— PQ codebooks: x206's %31 sample SEEDS one Lloyd round ——
-        // Round 13: the ≤128-row seed/trained books are COLLECTED once
-        // (driver-held model state) instead of eagerly checkpointed and
-        // re-read — each former checkpoint was a whole materialization job
-        // at this (metadata-sized) row count.
-        val cb0 = res.filter(col("vec_id") % 31 === 1)
-          .withColumn("rk", row_number().over(Window.orderBy("vec_id")))
-          .filter(col("rk") <= 16)
-          .select((col("rk") - 1).cast(LongType).as("cw"),
-            posexplode(expr(
-              "transform(sequence(0, 7), t -> slice(rv, t * 8 + 1, 8))"))
-              .as(Seq("sb", "cvec")))
-        val cb0Rows = collectPqCb(cb0) // ≤ m·kpq = 128 rows — bounded model state
-        val sub = res.select(col("vec_id"), col("cent_id"),
-            posexplode(expr(
-              "transform(sequence(0, 7), t -> slice(rv, t * 8 + 1, 8))"))
-              .as(Seq("sb", "sub")))
-          // |sub|² once per subvector: the assign step scores every
-          // codeword via |s|²+|c|²−2s·c with the native IntDotProduct
-          // (round 12; the composable l2 lambda is CodegenFallback —
-          // interpreted per (subvector × codeword) row, the measured
-          // dominant CPU of this gate). Integer identity: exact, same dv.
-          .withColumn("sub2",
-            graft.functions.IntDotProduct.intDot(col("sub"), col("sub")))
-          .localCheckpoint(true) // read by train-assign AND final encode
-        // argmin codeword: the shared inline scorer (pqArgminCode) — the
-        // codebook is collected (driver-held model state, the coarse
-        // quantizer's own posture) and the packed dv·16+cw argmin unrolls
-        // into one codegen projection; no join fan-out, no
-        // re-aggregation, and no |sub|⋈|sub| join-back for the centroid
-        // update (each sub row already carries its own subvector).
-        val cb1f = sub.withColumn("cw", pqArgminRows(cb0Rows))
-          .select(col("sb"), col("cw"), posexplode(col("sub")).as(Seq("p", "v")))
-          .groupBy("sb", "cw", "p")
-          .agg(floor(sum(col("v")).cast(DoubleType) / count(lit(1)))
-            .cast("long").as("cv"))
-          .groupBy("sb", "cw")
-          .agg(expr("transform(array_sort(collect_list(struct(p, cv))), x -> x.cv)")
-            .as("cvec"))
-        val cb1Rows = collectPqCb(cb1f) // trained codebooks (empty codewords drop)
-        // the tiny trained book re-enters the plan as a LOCAL frame (no
-        // recompute, no checkpoint) for the query-distance table below
-        val cb1 = cb1Rows.toSeq.toDF("sb", "cw", "cvec")
-        val codes = sub.withColumn("code", pqArgminRows(cb1Rows))
-          .select("vec_id", "cent_id", "sb", "code")
-        // —— query side: probe ONE cluster, ADC against trained books ——
-        val q = res.filter(col("vec_id") % 53 === 7 && col("vec_id") < 20000)
-          .select(col("vec_id").as("q_id"), col("cent_id").as("q_cent"),
-            col("rv").as("q_rv"))
-          .localCheckpoint(true) // bounded query sample (x69/x124 argument)
-        val qd = q.crossJoin(broadcast(cb1))
-          .withColumn("qd", expr(l2("slice(q_rv, sb * 8 + 1, 8)", "cvec")))
-          .select(col("q_id"), col("q_cent"), col("sb").as("qsb"),
-            col("cw").as("qcw"), col("qd"))
-        val ap = codes
-          .join(broadcast(qd),
-            col("cent_id") === col("q_cent") && col("sb") === col("qsb") &&
-              col("code") === col("qcw"))
-          .filter(col("vec_id") =!= col("q_id"))
-          .groupBy(col("q_id"), col("vec_id").as("n_id"))
-          .agg(sum(col("qd")).as("adc"))
-          .localCheckpoint(true) // n_cands + top-k both read it
-        val nCands = ap.groupBy("q_id").agg(count(lit(1)).as("n_cands"))
-        val atop = ap
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("q_id").orderBy(col("adc"), col("n_id"))))
-          .filter(col("rn") <= 10)
-          .select("q_id", "n_id", "adc")
-          .localCheckpoint(true) // overlap + adc_sum both read it
-        // join the concurrently-materialized exact referee (forked above,
-        // right after its qfull/e inputs were pinned)
-        val exact = scala.concurrent.Await.result(
-          exactF, scala.concurrent.duration.Duration(600, "s"))
+        // the exact referee materializes while the PQ branch below trains
+        // its codebooks and ranks the ADC candidates
+        val (exact, (nCands, atop)) = Concurrently.both(s)(exactDf.localCheckpoint(true), {
+          // —— PQ codebooks: x206's %31 sample SEEDS one Lloyd round ——
+          // Round 13: the ≤128-row seed/trained books are COLLECTED once
+          // (driver-held model state) instead of eagerly checkpointed and
+          // re-read — each former checkpoint was a whole materialization job
+          // at this (metadata-sized) row count.
+          val cb0 = res.filter(col("vec_id") % 31 === 1)
+            .withColumn("rk", row_number().over(Window.orderBy("vec_id")))
+            .filter(col("rk") <= 16)
+            .select((col("rk") - 1).cast(LongType).as("cw"),
+              posexplode(expr(
+                "transform(sequence(0, 7), t -> slice(rv, t * 8 + 1, 8))"))
+                .as(Seq("sb", "cvec")))
+          val cb0Rows = collectPqCb(cb0) // ≤ m·kpq = 128 rows — bounded model state
+          val sub = res.select(col("vec_id"), col("cent_id"),
+              posexplode(expr(
+                "transform(sequence(0, 7), t -> slice(rv, t * 8 + 1, 8))"))
+                .as(Seq("sb", "sub")))
+            // |sub|² once per subvector: the assign step scores every
+            // codeword via |s|²+|c|²−2s·c with the native IntDotProduct
+            // (round 12; the composable l2 lambda is CodegenFallback —
+            // interpreted per (subvector × codeword) row, the measured
+            // dominant CPU of this gate). Integer identity: exact, same dv.
+            .withColumn("sub2",
+              graft.functions.IntDotProduct.intDot(col("sub"), col("sub")))
+            .localCheckpoint(true) // read by train-assign AND final encode
+          // argmin codeword: the shared inline scorer (pqArgminCode) — the
+          // codebook is collected (driver-held model state, the coarse
+          // quantizer's own posture) and the packed dv·16+cw argmin unrolls
+          // into one codegen projection; no join fan-out, no
+          // re-aggregation, and no |sub|⋈|sub| join-back for the centroid
+          // update (each sub row already carries its own subvector).
+          val cb1f = sub.withColumn("cw", pqArgminRows(cb0Rows))
+            .select(col("sb"), col("cw"), posexplode(col("sub")).as(Seq("p", "v")))
+            .groupBy("sb", "cw", "p")
+            .agg(floor(sum(col("v")).cast(DoubleType) / count(lit(1)))
+              .cast("long").as("cv"))
+            .groupBy("sb", "cw")
+            .agg(expr("transform(array_sort(collect_list(struct(p, cv))), x -> x.cv)")
+              .as("cvec"))
+          val cb1Rows = collectPqCb(cb1f) // trained codebooks (empty codewords drop)
+          // the tiny trained book re-enters the plan as a LOCAL frame (no
+          // recompute, no checkpoint) for the query-distance table below
+          val cb1 = cb1Rows.toSeq.toDF("sb", "cw", "cvec")
+          val codes = sub.withColumn("code", pqArgminRows(cb1Rows))
+            .select("vec_id", "cent_id", "sb", "code")
+          // —— query side: probe ONE cluster, ADC against trained books ——
+          val q = res.filter(col("vec_id") % 53 === 7 && col("vec_id") < 20000)
+            .select(col("vec_id").as("q_id"), col("cent_id").as("q_cent"),
+              col("rv").as("q_rv"))
+            .localCheckpoint(true) // bounded query sample (x69/x124 argument)
+          val qd = q.crossJoin(broadcast(cb1))
+            .withColumn("qd", expr(l2("slice(q_rv, sb * 8 + 1, 8)", "cvec")))
+            .select(col("q_id"), col("q_cent"), col("sb").as("qsb"),
+              col("cw").as("qcw"), col("qd"))
+          val ap = codes
+            .join(broadcast(qd),
+              col("cent_id") === col("q_cent") && col("sb") === col("qsb") &&
+                col("code") === col("qcw"))
+            .filter(col("vec_id") =!= col("q_id"))
+            .groupBy(col("q_id"), col("vec_id").as("n_id"))
+            .agg(sum(col("qd")).as("adc"))
+            .localCheckpoint(true) // n_cands + top-k both read it
+          val nCands = ap.groupBy("q_id").agg(count(lit(1)).as("n_cands"))
+          val atop = ap
+            .withColumn("rn", row_number().over(
+              Window.partitionBy("q_id").orderBy(col("adc"), col("n_id"))))
+            .filter(col("rn") <= 10)
+            .select("q_id", "n_id", "adc")
+            .localCheckpoint(true) // overlap + adc_sum both read it
+          (nCands, atop)
+        })
         val ov = atop.join(broadcast(exact), Seq("q_id", "n_id"))
           .groupBy("q_id").agg(count(lit(1)).as("n_overlap"))
         val asum = atop.groupBy("q_id").agg(sum(col("adc")).as("adc_sum"))
@@ -13980,9 +13924,7 @@ object PipelineQueries {
         val staged = events(s, d)
           .select(col("user_id"), col("event_type"),
             floor(col("value") * 100).cast(LongType).as("cents"),
-            expr("""CAST(least(greatest(
-                   |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
-                   |  0), 3) AS INT)""".stripMargin).as("b"))
+            eventBatch.as("b"))
         // changelog checkpointing left on the default here (round 12):
         // neutral for this gate's state size — see x199's note; x213 is
         // where the knob pays.
@@ -14047,9 +13989,7 @@ object PipelineQueries {
         val staged = events(s, d)
           .filter(col("event_type").isin("signup", "purchase"))
           .select(col("event_id"), col("user_id"), col("event_type"), col("ts"),
-            expr("""CAST(least(greatest(
-                   |  CAST(datediff(to_date(ts), DATE '2024-01-01') div 8 AS INT),
-                   |  0), 3) AS INT)""".stripMargin).as("b"))
+            eventBatch.as("b"))
         val provKey = "spark.sql.streaming.stateStore.providerClass"
         def runOn(rocks: Boolean, label: String) = {
           // each leg's provider is set on its replay's own session: Verify
@@ -14080,23 +14020,13 @@ object PipelineQueries {
             lit(sawRocks.get() == rocks).as("prov_ok"))
         }
         // The two provider legs are INDEPENDENT replays (own session,
-        // own staging dir, own state stores): run them
-        // CONCURRENTLY (guide §2.6). Each leg's emissions are unchanged;
-        // the final full-tiebreak sort fixes the union order.
-        locally {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-          implicit val ec =
-            scala.concurrent.ExecutionContext.fromExecutor(pool)
-          val heapF = Future(runOn(rocks = false, "heap"))
-          val rocksF = Future(runOn(rocks = true, "rocksdb"))
-          val (heap, rocks) =
-            try Await.result(heapF.zip(rocksF), Duration.Inf)
-            finally pool.shutdown()
-          heap.unionByName(rocks)
-            .orderBy("mode", "user_id", "s_id", "p_id")
-        }
+        // own staging dir, own state stores): run them concurrently; a
+        // failed leg stops the other's stream. Each leg's emissions are
+        // unchanged; the final full-tiebreak sort fixes the union order.
+        val (heap, rocks) = Concurrently.both(s)(
+          runOn(rocks = false, "heap"), runOn(rocks = true, "rocksdb"))
+        heap.unionByName(rocks)
+          .orderBy("mode", "user_id", "s_id", "p_id")
       },
       Some("""WITH s AS (SELECT event_id AS s_id, user_id, ts AS s_ts
              |  FROM events WHERE event_type = 'signup'),

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import graft.ops.CheckpointBlocks
+import graft.ops.{CheckpointBlocks, Concurrently}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -228,11 +228,11 @@ object StreamGate {
   /** Stage each micro-batch of `input` as exactly one parquet file
     * `destDir/batch-%04d.parquet` with mtimes pinned 2 s apart (oldest-first
     * file-source ordering). The N per-batch writes are INDEPENDENT Spark
-    * jobs (disjoint filters, disjoint output paths), so they run from a
-    * small thread pool (guide §2.6 overlap: actions are only sequential
-    * because driver code calls them sequentially) — wall-clock is the
-    * slowest single write, not the sum; emissions are byte-identical
-    * because file contents, names and mtimes are unchanged. */
+    * jobs (disjoint filters, disjoint output paths), so they run through
+    * [[Concurrently]]: wall-clock is the slowest single write, not the sum,
+    * and a failed write cancels the others and waits for them before
+    * `withRun` deletes the run root. Emissions are byte-identical because file
+    * contents, names and mtimes are unchanged. */
   private def stageBatches(
       input: DataFrame,
       batchCol: String,
@@ -243,28 +243,19 @@ object StreamGate {
       base: Long,
       name: String): Unit = {
     fs.mkdirs(new Path(destDir))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(nBatches, 4)))
-    try {
-      val futs = (0 until nBatches).map { i =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            val stage = s"$stageRoot/_stage_$i"
-            input.filter(org.apache.spark.sql.functions.col(batchCol) === i)
-              .drop(batchCol).coalesce(1)
-              .write.mode("overwrite").parquet(stage)
-            val part = fs.listStatus(new Path(stage))
-              .map(_.getPath).find(_.getName.startsWith("part-"))
-              .getOrElse(sys.error(s"stream gate $name: no part file for batch $i"))
-            val dst = new Path(f"$destDir/batch-$i%04d.parquet")
-            if (!fs.rename(part, dst)) sys.error(s"stream gate $name: rename failed")
-            fs.delete(new Path(stage), true)
-            fs.setTimes(dst, base + i * 2000L, -1)
-          }
-        })
-      }
-      futs.foreach(_.get())
-    } finally pool.shutdown()
+    Concurrently.all(input.sparkSession)((0 until nBatches).map { i => () =>
+      val stage = s"$stageRoot/_stage_$i"
+      input.filter(org.apache.spark.sql.functions.col(batchCol) === i)
+        .drop(batchCol).coalesce(1)
+        .write.mode("overwrite").parquet(stage)
+      val part = fs.listStatus(new Path(stage))
+        .map(_.getPath).find(_.getName.startsWith("part-"))
+        .getOrElse(sys.error(s"stream gate $name: no part file for batch $i"))
+      val dst = new Path(f"$destDir/batch-$i%04d.parquet")
+      if (!fs.rename(part, dst)) sys.error(s"stream gate $name: rename failed")
+      fs.delete(new Path(stage), true)
+      fs.setTimes(dst, base + i * 2000L, -1)
+    })
   }
 
   /** The replay's result: one scan over the union of the pinned

@@ -44,73 +44,76 @@ class BatchedSinkSpec extends SparkSpec {
 
   test("writeResumable: crash mid-run, then resume from the on-disk ledger") {
     BatchedSinkSpec.sent.clear()
-    val dir = java.nio.file.Files.createTempDirectory("graft-ledger").toString
-    val rows = (1 to 300).map(_.toString).toDS().coalesce(1).sortWithinPartitions("value")
+    withTempDir("graft-ledger") { dir =>
+      val rows = (1 to 300).map(_.toString).toDS().coalesce(1).sortWithinPartitions("value")
 
-    // First run commits batch 0, then dies on batch 1 — its marker is on
-    // disk, batches 1 and 2 are not.
-    intercept[Exception] {
-      BatchedSink.writeResumable[String](rows, 100, (id, b) => {
-        if (id.index == 1L) throw new RuntimeException("sink down")
-        BatchedSinkSpec.sent.add(id.toString -> b)
-      }, dir)
+      // First run commits batch 0, then dies on batch 1 — its marker is on
+      // disk, batches 1 and 2 are not.
+      intercept[Exception] {
+        BatchedSink.writeResumable[String](rows, 100, (id, b) => {
+          if (id.index == 1L) throw new RuntimeException("sink down")
+          BatchedSinkSpec.sent.add(id.toString -> b)
+        }, dir)
+      }
+      assert(BatchLedger.load(spark, dir) == Set("0:0"))
+
+      // Resume with a healthy sink: only the uncommitted batches re-send.
+      BatchedSinkSpec.sent.clear()
+      BatchedSink.writeResumable[String](rows, 100,
+        (id, b) => BatchedSinkSpec.sent.add(id.toString -> b), dir)
+      assert(BatchedSinkSpec.sent.asScala.map(_._1).toSet == Set("0:1", "0:2"))
+      assert(BatchLedger.load(spark, dir) == Set("0:0", "0:1", "0:2"))
+
+      // A third run is a no-op: everything is committed.
+      BatchedSinkSpec.sent.clear()
+      BatchedSink.writeResumable[String](rows, 100,
+        (id, b) => BatchedSinkSpec.sent.add(id.toString -> b), dir)
+      assert(BatchedSinkSpec.sent.isEmpty)
     }
-    assert(BatchLedger.load(spark, dir) == Set("0:0"))
-
-    // Resume with a healthy sink: only the uncommitted batches re-send.
-    BatchedSinkSpec.sent.clear()
-    BatchedSink.writeResumable[String](rows, 100,
-      (id, b) => BatchedSinkSpec.sent.add(id.toString -> b), dir)
-    assert(BatchedSinkSpec.sent.asScala.map(_._1).toSet == Set("0:1", "0:2"))
-    assert(BatchLedger.load(spark, dir) == Set("0:0", "0:1", "0:2"))
-
-    // A third run is a no-op: everything is committed.
-    BatchedSinkSpec.sent.clear()
-    BatchedSink.writeResumable[String](rows, 100,
-      (id, b) => BatchedSinkSpec.sent.add(id.toString -> b), dir)
-    assert(BatchedSinkSpec.sent.isEmpty)
   }
 
   test("BatchLedger.compact folds markers into one file, resume still exact") {
     BatchedSinkSpec.sent.clear()
-    val dir = java.nio.file.Files.createTempDirectory("graft-ledger-c").toString
-    val rows = (1 to 250).map(_.toString).toDS().coalesce(1).sortWithinPartitions("value")
-    BatchedSink.writeResumable[String](rows, 100,
-      (id, b) => BatchedSinkSpec.sent.add(id.toString -> b), dir)
-    val before = BatchLedger.load(spark, dir)
-    assert(before.size == 3)
+    withTempDir("graft-ledger-c") { dir =>
+      val rows = (1 to 250).map(_.toString).toDS().coalesce(1).sortWithinPartitions("value")
+      BatchedSink.writeResumable[String](rows, 100,
+        (id, b) => BatchedSinkSpec.sent.add(id.toString -> b), dir)
+      val before = BatchLedger.load(spark, dir)
+      assert(before.size == 3)
 
-    BatchLedger.compact(spark, dir)
-    val files = new java.io.File(dir).listFiles().map(_.getName).toSet
-    assert(files.contains("_compacted") && !files.exists(_.endsWith(".done")))
-    assert(BatchLedger.load(spark, dir) == before)
+      BatchLedger.compact(spark, dir)
+      val files = new java.io.File(dir).listFiles().map(_.getName).toSet
+      assert(files.contains("_compacted") && !files.exists(_.endsWith(".done")))
+      assert(BatchLedger.load(spark, dir) == before)
 
-    BatchedSinkSpec.sent.clear()
-    BatchedSink.writeResumable[String](rows, 100,
-      (id, b) => BatchedSinkSpec.sent.add(id.toString -> b), dir)
-    assert(BatchedSinkSpec.sent.isEmpty)
+      BatchedSinkSpec.sent.clear()
+      BatchedSink.writeResumable[String](rows, 100,
+        (id, b) => BatchedSinkSpec.sent.add(id.toString -> b), dir)
+      assert(BatchedSinkSpec.sent.isEmpty)
+    }
   }
 
   test("a crash between compact's delete and rename loses no commit records") {
     BatchedSinkSpec.sent.clear()
-    val dir = java.nio.file.Files.createTempDirectory("graft-ledger-t").toString
-    val rows = (1 to 250).map(_.toString).toDS().coalesce(1).sortWithinPartitions("value")
-    BatchedSink.writeResumable[String](rows, 100,
-      (id, b) => BatchedSinkSpec.sent.add(id.toString -> b), dir)
-    val before = BatchLedger.load(spark, dir)
+    withTempDir("graft-ledger-t") { dir =>
+      val rows = (1 to 250).map(_.toString).toDS().coalesce(1).sortWithinPartitions("value")
+      BatchedSink.writeResumable[String](rows, 100,
+        (id, b) => BatchedSinkSpec.sent.add(id.toString -> b), dir)
+      val before = BatchLedger.load(spark, dir)
 
-    // simulate the crash window: tmp written (superset), _compacted deleted
-    BatchLedger.compact(spark, dir)
-    val d = new java.io.File(dir)
-    java.nio.file.Files.copy(
-      new java.io.File(d, "_compacted").toPath, new java.io.File(d, "_compacted.tmp").toPath)
-    assert(new java.io.File(d, "_compacted").delete())
+      // simulate the crash window: tmp written (superset), _compacted deleted
+      BatchLedger.compact(spark, dir)
+      val d = new java.io.File(dir)
+      java.nio.file.Files.copy(
+        new java.io.File(d, "_compacted").toPath, new java.io.File(d, "_compacted.tmp").toPath)
+      assert(new java.io.File(d, "_compacted").delete())
 
-    assert(BatchLedger.load(spark, dir) == before) // tmp fallback covers it
-    BatchedSinkSpec.sent.clear()
-    BatchedSink.writeResumable[String](rows, 100,
-      (id, b) => BatchedSinkSpec.sent.add(id.toString -> b), dir)
-    assert(BatchedSinkSpec.sent.isEmpty) // nothing re-sent
+      assert(BatchLedger.load(spark, dir) == before) // tmp fallback covers it
+      BatchedSinkSpec.sent.clear()
+      BatchedSink.writeResumable[String](rows, 100,
+        (id, b) => BatchedSinkSpec.sent.add(id.toString -> b), dir)
+      assert(BatchedSinkSpec.sent.isEmpty) // nothing re-sent
+    }
   }
 }
 

@@ -219,9 +219,8 @@ class DecoderFuzzSpec extends SparkSpec {
 
   private def pqFuzzOne(writeOpts: Map[String, String], column: String,
       decodeBytes: Boolean): Unit = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_fuzz_pq_" +
-      s"${ProcessHandle.current().pid()}_${System.nanoTime()}"
-    try {
+    withTempDir("graft-fuzz-pq") { root =>
+      val dir = s"$root/t"
       val w = (1 to 800).map(i =>
         (i.toLong, if (i % 5 == 0) None else Some((i * 17L) % 301L),
           if (i % 4 == 0) None else Some(s"val-${i % 23}-${(i * 7) % 53}")))
@@ -261,11 +260,6 @@ class DecoderFuzzSpec extends SparkSpec {
         mut(i) = (mut(i) ^ 0xff).toByte
         neverThrows(s"pq $column flip=$i")(decode(mut))
       }
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(p, true)
-      catch { case _: Exception => () }
     }
   }
 
@@ -280,9 +274,8 @@ class DecoderFuzzSpec extends SparkSpec {
   }
 
   test("parquet pages: chunk truncation at every offset and byte-flip sweep") {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_fuzz_pq_" +
-      s"${ProcessHandle.current().pid()}_${System.nanoTime()}"
-    try {
+    withTempDir("graft-fuzz-pq") { root =>
+      val dir = s"$root/t"
       (1 to 800).map(i =>
         (i.toLong, if (i % 5 == 0) None else Some((i * 17L) % 301L)))
         .toDF("k", "v")
@@ -319,11 +312,6 @@ class DecoderFuzzSpec extends SparkSpec {
         neverThrows(s"pq chunk flip=$i")(
           ParquetPages.decodeChunk(mut, loc, "f"))
       }
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(p, true)
-      catch { case _: Exception => () }
     }
   }
 

@@ -41,10 +41,7 @@ class GraphAlgosSpec extends SparkSpec {
   }
 
   test("reliable=true (recoverable checkpoint) matches the default path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt3").toString
-    val prev = spark.sparkContext.getCheckpointDir
-    try {
-      spark.sparkContext.setCheckpointDir(dir)
+    withCheckpointDir { dir =>
       val a = GraphAlgos.connectedComponents(graph)
         .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
       val b = GraphAlgos.connectedComponents(graph, reliable = true)
@@ -57,7 +54,7 @@ class GraphAlgosSpec extends SparkSpec {
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(java.nio.file.Files.isRegularFile(_)).count()
       assert(wrote > 0, "reliable mode must write recoverable checkpoint files")
-    } finally prev.foreach(p => spark.sparkContext.setCheckpointDir(p))
+    }
   }
 
   test("agrees with TransitiveClosure on the reference-shaped hierarchy") {

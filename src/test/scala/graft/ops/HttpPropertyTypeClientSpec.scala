@@ -7,7 +7,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 /** Exercises the real java.net.http transport against an in-process stub
   * server: happy path through the full Spark enrich pipeline, 404→empty,
-  * 5xx retry-then-succeed, and the JSON scanner's escape handling. */
+  * 5xx retry-then-succeed, and the JSON parse of the response body. */
 class HttpPropertyTypeClientSpec extends SparkSpec {
   import spark.implicits._
 
@@ -82,5 +82,29 @@ class HttpPropertyTypeClientSpec extends SparkSpec {
     // the escape is assembled at runtime so scalac never preprocesses it
     val body = "{\"event_and_property_types\":[\"Caf\\" + "u00e9:x\"]}"
     assert(parseEntries(body) == Seq("Café:x"))
+  }
+
+  test("JSON parse: the key's text as a value, and an array before the key, do not count") {
+    assert(HttpPropertyTypeClient.parseEntries(
+      """{"kind":"event_and_property_types","other":["x:y"],"event_and_property_types":["a:b"]}""")
+      == Seq("a:b"))
+  }
+
+  test("JSON parse: a nested object carrying the key does not shadow the top-level key") {
+    assert(HttpPropertyTypeClient.parseEntries(
+      """{"nested":{"event_and_property_types":["n:x"]},"event_and_property_types":["t:y"]}""")
+      == Seq("t:y"))
+  }
+
+  test("JSON parse: \\b and \\f decode to backspace and form feed, not the letters") {
+    assert(HttpPropertyTypeClient.parseEntries("{\"event_and_property_types\":[\"a\\bb:x\\f\"]}")
+      == Seq("a\bb:x\f"))
+  }
+
+  test("a 2xx body that is not a JSON object fails the fetch with a clear message") {
+    withServer { ex => conceptId(ex); respond(ex, 200, """["T:a"]""") } { url =>
+      val e = intercept[IllegalStateException] { new HttpPropertyTypeClient(url).fetch(3L) }
+      assert(e.getMessage.contains("not an object"), e.getMessage)
+    }
   }
 }

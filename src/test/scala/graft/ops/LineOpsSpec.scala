@@ -1,18 +1,18 @@
 package graft.ops
 
 import graft.SparkSpec
-import java.nio.file.Files
 
 class LineOpsSpec extends SparkSpec {
   import spark.implicits._
 
   test("convertToJson appends a comma per line (R1, main.py:33-42)") {
-    val in = Files.createTempDirectory("graft-r1").toString
-    val out = s"$in/out"
-    Seq("""{"id": 1}""", """{"id": 2}""").toDF("value").coalesce(1).write.text(s"$in/in")
-    LineOps.convertToJson(spark, s"$in/in", out)
-    val got = spark.read.text(out).as[String].collect().toSet
-    assert(got == Set("""{"id": 1},""", """{"id": 2},"""))
+    withTempDir("graft-r1") { in =>
+      val out = s"$in/out"
+      Seq("""{"id": 1}""", """{"id": 2}""").toDF("value").coalesce(1).write.text(s"$in/in")
+      LineOps.convertToJson(spark, s"$in/in", out)
+      val got = spark.read.text(out).as[String].collect().toSet
+      assert(got == Set("""{"id": 1},""", """{"id": 2},"""))
+    }
   }
 
   test("statementsForMissedIds is a contains-predicate semi join (R9, main.py:390-397)") {

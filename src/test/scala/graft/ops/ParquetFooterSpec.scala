@@ -5,18 +5,14 @@ import org.apache.spark.sql.functions._
 
 class ParquetFooterSpec extends SparkSpec {
 
-  private def tmp(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_footer_spec_" +
-      s"${ProcessHandle.current().pid()}_$name"
-
   test("footer facts match the engine's own view of a file it wrote") {
-    val dir = tmp("basic")
-    spark.range(0, 5000)
-      .select(col("id"), (col("id") * 3).as("v"),
-        concat(lit("s"), col("id") % 7).as("s"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(dir)
-    try {
+    withTempDir("graft-footer") { root =>
+      val dir = s"$root/t"
+      spark.range(0, 5000)
+        .select(col("id"), (col("id") * 3).as("v"),
+          concat(lit("s"), col("id") % 7).as("s"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(dir)
       val row = ParquetFooter.describe(spark, Seq(("t", dir))).head()
       assert(row.getAs[Int]("n_files") === 1)
       assert(row.getAs[Long]("num_rows") === 5000L)
@@ -25,18 +21,18 @@ class ParquetFooterSpec extends SparkSpec {
       assert(row.getAs[Boolean]("groups_rows_ok"))
       assert(row.getAs[Boolean]("chunks_ok"))
       assert(row.getAs[Boolean]("ver_ok"))
-    } finally deleteDir(dir)
+    }
   }
 
   test("multiple row groups: forced small block size still covers all rows") {
-    val dir = tmp("groups")
-    spark.range(0, 200000)
-      .select(col("id"), concat(lit("padpadpadpad"), col("id")).as("pad"))
-      .coalesce(1)
-      .write.mode("overwrite")
-      .option("parquet.block.size", 64 * 1024) // ~64 KiB groups
-      .parquet(dir)
-    try {
+    withTempDir("graft-footer") { root =>
+      val dir = s"$root/t"
+      spark.range(0, 200000)
+        .select(col("id"), concat(lit("padpadpadpad"), col("id")).as("pad"))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .option("parquet.block.size", 64 * 1024) // ~64 KiB groups
+        .parquet(dir)
       val row = ParquetFooter.describe(spark, Seq(("t", dir))).head()
       assert(row.getAs[Long]("num_rows") === 200000L)
       assert(row.getAs[Long]("n_groups") > 1L, "expected several row groups")
@@ -44,41 +40,41 @@ class ParquetFooterSpec extends SparkSpec {
       assert(row.getAs[Boolean]("chunks_ok"))
       // chunk count = groups × leaves, the invariant the gate pins
       assert(row.getAs[Long]("n_chunks") === row.getAs[Long]("n_groups") * 2)
-    } finally deleteDir(dir)
+    }
   }
 
   test("multi-part directory aggregates across part files") {
-    val dir = tmp("parts")
-    spark.range(0, 9000).repartition(3)
-      .write.mode("overwrite").parquet(dir)
-    try {
+    withTempDir("graft-footer") { root =>
+      val dir = s"$root/t"
+      spark.range(0, 9000).repartition(3)
+        .write.mode("overwrite").parquet(dir)
       val row = ParquetFooter.describe(spark, Seq(("t", dir))).head()
       assert(row.getAs[Int]("n_files") === 3)
       assert(row.getAs[Long]("num_rows") === 9000L)
       assert(row.getAs[Int]("n_leaf_columns") === 1)
       assert(row.getAs[Boolean]("groups_rows_ok"))
-    } finally deleteDir(dir)
+    }
   }
 
   test("nested schema counts leaves, not groups (list<float> = 1 leaf)") {
-    val dir = tmp("nested")
-    spark.range(0, 100)
-      .select(col("id"), array(lit(1.0f), lit(2.0f)).as("emb"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(dir)
-    try {
+    withTempDir("graft-footer") { root =>
+      val dir = s"$root/t"
+      spark.range(0, 100)
+        .select(col("id"), array(lit(1.0f), lit(2.0f)).as("emb"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(dir)
       val row = ParquetFooter.describe(spark, Seq(("t", dir))).head()
       // id + the list's element leaf — the wrapping group/list nodes
       // declare children and must not count
       assert(row.getAs[Int]("n_leaf_columns") === 2)
       assert(row.getAs[Boolean]("chunks_ok"))
-    } finally deleteDir(dir)
+    }
   }
 
   test("corrupt magic and truncated footers degrade to zero parsed files") {
-    val dir = tmp("corrupt")
-    spark.range(0, 10).coalesce(1).write.mode("overwrite").parquet(dir)
-    try {
+    withTempDir("graft-footer") { root =>
+      val dir = s"$root/t"
+      spark.range(0, 10).coalesce(1).write.mode("overwrite").parquet(dir)
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val part = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
@@ -99,19 +95,19 @@ class ParquetFooterSpec extends SparkSpec {
       val row = ParquetFooter.describe(spark, Seq(("t", dir))).head()
       assert(row.getAs[Int]("n_files") === 0)
       assert(!row.getAs[Boolean]("groups_rows_ok")) // no parseable footer
-    } finally deleteDir(dir)
+    }
   }
 
   test("page index: per-page facts match the engine's own view of a sorted store") {
-    val dir = tmp("pageindex")
-    spark.range(0, 2400)
-      .select(col("id").as("k"), (col("id") * 7 % 100).as("v"))
-      .coalesce(1).sortWithinPartitions("k")
-      .write.mode("overwrite")
-      .option("parquet.page.row.count.limit", "100")
-      .option("parquet.block.size", "16384")
-      .parquet(dir)
-    try {
+    withTempDir("graft-footer") { root =>
+      val dir = s"$root/t"
+      spark.range(0, 2400)
+        .select(col("id").as("k"), (col("id") * 7 % 100).as("v"))
+        .coalesce(1).sortWithinPartitions("k")
+        .write.mode("overwrite")
+        .option("parquet.page.row.count.limit", "100")
+        .option("parquet.block.size", "16384")
+        .parquet(dir)
       val pi = ParquetFooter.int64PageIndex(spark, dir, "k").collect()
       assert(pi.nonEmpty && pi.forall(_.getAs[Boolean]("ok")), pi.mkString("\n"))
       // pages partition the file's rows: global starts strictly increase,
@@ -132,26 +128,20 @@ class ParquetFooterSpec extends SparkSpec {
       }
       // ≥ 2 row groups at this block size — the within-group skip matters
       assert(pi.map(_.getAs[Int]("grp")).distinct.length >= 2)
-    } finally deleteDir(dir)
+    }
   }
 
   test("page index: a column with no index structures degrades to ok=false rows") {
-    val dir = tmp("pageindex_missing")
-    spark.range(0, 100).select(col("id").as("k"))
-      .coalesce(1).write.mode("overwrite")
-      // parquet-mr drops the page indexes when told not to write them
-      .option("parquet.column.index.truncate.length", "64")
-      .parquet(dir)
-    try {
+    withTempDir("graft-footer") { root =>
+      val dir = s"$root/t"
+      spark.range(0, 100).select(col("id").as("k"))
+        .coalesce(1).write.mode("overwrite")
+        // parquet-mr drops the page indexes when told not to write them
+        .option("parquet.column.index.truncate.length", "64")
+        .parquet(dir)
       // ask for a column that does not exist: locations absent → bad rows
       val pi = ParquetFooter.int64PageIndex(spark, dir, "nope").collect()
       assert(pi.nonEmpty && pi.forall(!_.getAs[Boolean]("ok")))
-    } finally deleteDir(dir)
-  }
-
-  private def deleteDir(dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    try p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    catch { case _: Exception => () }
+    }
   }
 }

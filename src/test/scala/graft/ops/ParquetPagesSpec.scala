@@ -12,16 +12,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 class ParquetPagesSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_pqpages_" +
-      s"${ProcessHandle.current().pid()}_${System.nanoTime()}"
-
-  private def cleanup(dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    try p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    catch { case _: Exception => () }
-  }
-
   private def facts(dir: String, col0: String): (Long, Long, Long, Long, Long) = {
     val df = spark.read.parquet(dir)
     val r = df.agg(count(lit(1)), sum(col(col0)),
@@ -59,16 +49,16 @@ class ParquetPagesSpec extends SparkSpec {
   }.toDF("k", "v")
 
   test("dictionary-encoded snappy pages match Spark's reader") {
-    val dir = tmp()
-    try {
+    withTempDir("graft-pqpages") { root =>
+      val dir = s"$root/t"
       sample.coalesce(1).write.option("compression", "snappy").parquet(dir)
       check(dir, "v", wantDict = true)
-    } finally cleanup(dir)
+    }
   }
 
   test("PLAIN uncompressed pages (dictionary disabled), multi-group") {
-    val dir = tmp()
-    try {
+    withTempDir("graft-pqpages") { root =>
+      val dir = s"$root/t"
       sample.coalesce(1).write
         .option("compression", "none")
         .option("parquet.enable.dictionary", "false")
@@ -78,12 +68,12 @@ class ParquetPagesSpec extends SparkSpec {
       check(dir, "v", wantDict = false)
       // the small block size must actually have produced several pages
       assert(decoded(dir, "v").map(_._1).sum > 2L)
-    } finally cleanup(dir)
+    }
   }
 
   test("REQUIRED column (no definition levels on the wire)") {
-    val dir = tmp()
-    try {
+    withTempDir("graft-pqpages") { root =>
+      val dir = s"$root/t"
       val schema = StructType(Seq(StructField("k", LongType, nullable = false)))
       val df = spark.createDataFrame(
         spark.sparkContext.parallelize((1 to 2000).map(i => Row(i * 3L)), 1),
@@ -93,12 +83,12 @@ class ParquetPagesSpec extends SparkSpec {
       // dictionary (it would be as large as the data), so PLAIN is expected
       check(dir, "k", wantDict = false)
       assert(decoded(dir, "k").map(_._4).sum == 0L)
-    } finally cleanup(dir)
+    }
   }
 
   test("all-null chunk keeps min/max identity sentinels and full null count") {
-    val dir = tmp()
-    try {
+    withTempDir("graft-pqpages") { root =>
+      val dir = s"$root/t"
       (1 to 100).map(i => (i.toLong, Option.empty[Long])).toDF("k", "v")
         .coalesce(1).write.option("compression", "none").parquet(dir)
       val rows = decoded(dir, "v")
@@ -110,24 +100,24 @@ class ParquetPagesSpec extends SparkSpec {
       // max(max_v) aggregation exact when mixed with value-bearing chunks
       assert(rows.forall(_._6 == Long.MaxValue))
       assert(rows.forall(_._7 == Long.MinValue))
-    } finally cleanup(dir)
+    }
   }
 
   test("out-of-scope codec routes to ok = false, never throws") {
-    val dir = tmp()
-    try {
+    withTempDir("graft-pqpages") { root =>
+      val dir = s"$root/t"
       sample.coalesce(1).write.option("compression", "gzip").parquet(dir)
       val rows = decoded(dir, "v")
       assert(rows.forall(!_._8))
-    } finally cleanup(dir)
+    }
   }
 
   test("missing column yields no rows") {
-    val dir = tmp()
-    try {
+    withTempDir("graft-pqpages") { root =>
+      val dir = s"$root/t"
       sample.coalesce(1).write.parquet(dir)
       assert(ParquetPages.int64Column(spark, dir, "nope").count() == 0L)
-    } finally cleanup(dir)
+    }
   }
 
   private def decodedBytes(dir: String, col0: String) = {
@@ -172,25 +162,25 @@ class ParquetPagesSpec extends SparkSpec {
   }.toDF("k", "s")
 
   test("BYTE_ARRAY v1: dictionary and PLAIN chunks match Spark's reader") {
-    val dir = tmp()
-    try {
+    withTempDir("graft-pqpages") { root =>
+      val dir = s"$root/t"
       strSample.coalesce(1).write.option("compression", "snappy").parquet(dir)
       checkBytes(dir, "s")
       assert(decodedBytes(dir, "s").exists(_._2 > 0L), "expected dict page")
-    } finally cleanup(dir)
-    val dir2 = tmp()
-    try {
+    }
+    withTempDir("graft-pqpages") { root =>
+      val dir2 = s"$root/t"
       strSample.coalesce(1).write
         .option("compression", "none")
         .option("parquet.enable.dictionary", "false")
         .option("parquet.page.size", "4096").parquet(dir2)
       checkBytes(dir2, "s")
-    } finally cleanup(dir2)
+    }
   }
 
   test("v2 pages: DELTA_BINARY_PACKED longs and DELTA_BYTE_ARRAY strings") {
-    val dir = tmp()
-    try {
+    withTempDir("graft-pqpages") { root =>
+      val dir = s"$root/t"
       sample.join(strSample, "k").coalesce(1).write
         .option("parquet.writer.version", "v2")
         .option("parquet.enable.dictionary", "false")
@@ -206,19 +196,19 @@ class ParquetPagesSpec extends SparkSpec {
         .agg(sum("n_v2_pages")).first().getLong(0)
       assert(v2long > 0L && v2str > 0L,
         s"expected v2 pages, got long=$v2long str=$v2str")
-    } finally cleanup(dir)
+    }
   }
 
   test("v2 pages with dictionary: RLE_DICTIONARY under DataPageHeaderV2") {
-    val dir = tmp()
-    try {
+    withTempDir("graft-pqpages") { root =>
+      val dir = s"$root/t"
       sample.join(strSample, "k").coalesce(1).write
         .option("parquet.writer.version", "v2")
         .option("compression", "none")
         .option("parquet.page.size", "4096").parquet(dir)
       check(dir, "v", wantDict = true)
       checkBytes(dir, "s")
-    } finally cleanup(dir)
+    }
   }
 
   test("deltaBinaryPacked cross-validates against parquet-mr's writer") {
@@ -335,31 +325,31 @@ class ParquetPagesSpec extends SparkSpec {
   }
 
   test("typed columns v1 (dictionary, snappy) match Spark's reader") {
-    val dir = tmp()
-    try {
+    withTempDir("graft-pqpages") { root =>
+      val dir = s"$root/t"
       typedSample.coalesce(1).write
         .option("compression", "snappy")
         .option("parquet.block.size", "65536")
         .option("parquet.page.size", "4096").parquet(dir)
       checkTyped(dir, wantDict = true, wantV2 = false)
-    } finally cleanup(dir)
+    }
   }
 
   test("typed columns v1 PLAIN (no dictionary) match Spark's reader") {
-    val dir = tmp()
-    try {
+    withTempDir("graft-pqpages") { root =>
+      val dir = s"$root/t"
       typedSample.coalesce(1).write
         .option("compression", "none")
         .option("parquet.enable.dictionary", "false")
         .option("parquet.block.size", "65536")
         .option("parquet.page.size", "4096").parquet(dir)
       checkTyped(dir, wantDict = false, wantV2 = false)
-    } finally cleanup(dir)
+    }
   }
 
   test("typed columns v2 (delta int32, DELTA_BYTE_ARRAY flba, nested delta) match") {
-    val dir = tmp()
-    try {
+    withTempDir("graft-pqpages") { root =>
+      val dir = s"$root/t"
       typedSample.coalesce(1).write
         .option("parquet.writer.version", "v2")
         .option("parquet.enable.dictionary", "false")
@@ -376,12 +366,12 @@ class ParquetPagesSpec extends SparkSpec {
         }).agg(sum("n_v2_pages")).first().getLong(0)
         assert(n2 > 0L, s"expected v2 pages for $c")
       }
-    } finally cleanup(dir)
+    }
   }
 
   test("deeper nesting yields no int64-leaf rows (or routed rows), never throws") {
-    val dir = tmp()
-    try {
+    withTempDir("graft-pqpages") { root =>
+      val dir = s"$root/t"
       Seq((1L, Seq(Seq(1L, 2L)), Seq(3L)))
         .toDF("k", "deep", "arr").coalesce(1).write.parquet(dir)
       // the shallow list still decodes; deep.list.element is a GROUP, not
@@ -391,7 +381,7 @@ class ParquetPagesSpec extends SparkSpec {
       assert(shallow.nonEmpty && shallow.forall(_.getAs[Boolean]("ok")))
       val deep = ParquetPages.listInt64Column(spark, dir, "deep").collect()
       assert(deep.forall(!_.getAs[Boolean]("ok")))
-    } finally cleanup(dir)
+    }
   }
 
   test("rleHybrid decodes runs, bit-packed groups, and mixed streams") {

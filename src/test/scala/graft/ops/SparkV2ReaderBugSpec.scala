@@ -24,14 +24,8 @@ class SparkV2ReaderBugSpec extends SparkSpec {
   import spark.implicits._
 
   test("vectorized DELTA_BYTE_ARRAY self-read: disagreement pinned to Spark 4.1.2") {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_v2bug_" +
-      s"${ProcessHandle.current().pid()}_${System.nanoTime()}"
-    val cleanup = () => {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      try p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      catch { case _: Exception => () }
-    }
-    try {
+    withTempDir("graft-v2bug") { root =>
+      val dir = s"$root/t"
       // the reproducing shape (probed): UNCOMPRESSED v2 pages across
       // multiple row groups — the page's level/value byte slicing is what
       // the vectorized reader mis-handles (the same file with snappy, or a
@@ -77,6 +71,6 @@ class SparkV2ReaderBugSpec extends SparkSpec {
             "mis-decodes its own v2 writer's DELTA_BYTE_ARRAY pages — " +
             "keep the arithmetic oracles in x200/x204")
       }
-    } finally cleanup()
+    }
   }
 }

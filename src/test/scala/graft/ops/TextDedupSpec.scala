@@ -66,10 +66,7 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("reliable checkpoint mode matches the default path (cluster fault-tolerance flag)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val prev = spark.sparkContext.getCheckpointDir
-    try {
-      spark.sparkContext.setCheckpointDir(dir)
+    withCheckpointDir { dir =>
       val a = TextDedup.dedupMapping(docs, minMatch = 6)
         .as[(Long, Long)].collect().toMap
       val b = TextDedup.dedupMapping(docs, minMatch = 6, reliable = true)
@@ -79,7 +76,7 @@ class TextDedupSpec extends SparkSpec {
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(java.nio.file.Files.isRegularFile(_)).count()
       assert(wrote > 0)
-    } finally prev.foreach(p => spark.sparkContext.setCheckpointDir(p))
+    }
   }
 
   test("dedupMappingFromPairs over a prebuilt pair set matches the end-to-end path") {
@@ -95,10 +92,7 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("reliable=true works on the pairs-in path too (cluster-mode dedup workflow)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt2").toString
-    val prev = spark.sparkContext.getCheckpointDir
-    try {
-      spark.sparkContext.setCheckpointDir(dir)
+    withCheckpointDir { dir =>
       val pairs = TextDedup.lshPairs(docs, minMatch = 6, reliable = true)
       val m = TextDedup.dedupMappingFromPairs(docs, pairs, reliable = true)
         .as[(Long, Long)].collect().toMap
@@ -106,7 +100,7 @@ class TextDedupSpec extends SparkSpec {
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(java.nio.file.Files.isRegularFile(_)).count()
       assert(wrote > 0, "reliable mode must write recoverable checkpoint files")
-    } finally prev.foreach(p => spark.sparkContext.setCheckpointDir(p))
+    }
   }
 
   test("label propagation runs ONE heavy job + one narrow scan per pass (job-count invariant)") {

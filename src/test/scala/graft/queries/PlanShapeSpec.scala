@@ -1041,22 +1041,18 @@ class PlanShapeSpec extends SparkSpec {
     // x175's returned frame is a checkpoint (the store is deleted in its
     // finally), so the ORC scan is pinned here on the same write/read shape
     import org.apache.spark.sql.functions._
-    val store = s"${System.getProperty("java.io.tmpdir")}/graft_planshape_orc_" +
-      s"${ProcessHandle.current().pid()}"
-    graft.Tables.lineitem(spark, sf001)
-      .filter(col("l_orderkey") < 60000)
-      .select("l_orderkey", "l_quantity", "l_returnflag")
-      .write.mode("overwrite").partitionBy("l_returnflag").orc(store)
-    try {
+    withTempDir("graft-planshape-orc") { root =>
+      val store = s"$root/t"
+      graft.Tables.lineitem(spark, sf001)
+        .filter(col("l_orderkey") < 60000)
+        .select("l_orderkey", "l_quantity", "l_returnflag")
+        .write.mode("overwrite").partitionBy("l_returnflag").orc(store)
       val p = spark.read.orc(store)
         .filter(col("l_returnflag") === "R" && col("l_quantity") < 25)
         .groupBy("l_returnflag").count()
         .queryExecution.executedPlan.toString
       assert(p.contains("PushedFilters: [") && p.contains("LessThan(l_quantity,25"), p)
       assert(p.contains("PartitionFilters: [") && p.contains("(l_returnflag"), p)
-    } finally {
-      val hp = new org.apache.hadoop.fs.Path(store)
-      hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
     }
   }
 }

@@ -4,7 +4,6 @@ import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import java.nio.file.Files
 
 class RunningUserStatsSpec extends SparkSpec {
 
@@ -25,27 +24,28 @@ class RunningUserStatsSpec extends SparkSpec {
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val dir = Files.createTempDirectory("graft-tws").toString
-      eventsIn.write.mode("overwrite").parquet(dir)
-      val src = spark.readStream.schema(eventsIn.schema).parquet(dir)
-        .as[RunningUserStats.EventIn](Encoders.product[RunningUserStats.EventIn])
-      val q = RunningUserStats.runningStats(src)
-        .writeStream.outputMode("append").format("memory").queryName("tws")
-        .trigger(Trigger.AvailableNow()).start()
-      assert(q.awaitTermination(120000), "stream did not terminate within 120s")
+      withTempDir("graft-tws") { dir =>
+        eventsIn.write.mode("overwrite").parquet(dir)
+        val src = spark.readStream.schema(eventsIn.schema).parquet(dir)
+          .as[RunningUserStats.EventIn](Encoders.product[RunningUserStats.EventIn])
+        val q = RunningUserStats.runningStats(src)
+          .writeStream.outputMode("append").format("memory").queryName("tws")
+          .trigger(Trigger.AvailableNow()).start()
+        assert(q.awaitTermination(120000), "stream did not terminate within 120s")
 
-      // one emission per key per micro-batch: the FINAL emission per user
-      // (max n_events) must equal the batch groupBy totals exactly
-      val last = spark.table("tws")
-        .groupBy("user_id")
-        .agg(max(struct(col("n_events"), col("sum_cents"), col("max_cents"))).as("s"))
-        .select(col("user_id"), col("s.n_events"), col("s.sum_cents"), col("s.max_cents"))
-      val batch = eventsIn.toDF()
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_events"), sum("cents").as("sum_cents"),
-          max("cents").as("max_cents"))
-      assert(last.count() == batch.count() && batch.count() > 0)
-      assert(last.except(batch).isEmpty && batch.except(last).isEmpty)
+        // one emission per key per micro-batch: the FINAL emission per user
+        // (max n_events) must equal the batch groupBy totals exactly
+        val last = spark.table("tws")
+          .groupBy("user_id")
+          .agg(max(struct(col("n_events"), col("sum_cents"), col("max_cents"))).as("s"))
+          .select(col("user_id"), col("s.n_events"), col("s.sum_cents"), col("s.max_cents"))
+        val batch = eventsIn.toDF()
+          .groupBy("user_id")
+          .agg(count(lit(1)).as("n_events"), sum("cents").as("sum_cents"),
+            max("cents").as("max_cents"))
+        assert(last.count() == batch.count() && batch.count() > 0)
+        assert(last.except(batch).isEmpty && batch.except(last).isEmpty)
+      }
     } finally {
       prev match {
         case Some(v) => spark.conf.set(key, v)
